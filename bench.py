@@ -626,8 +626,9 @@ def main():
                 pairs.append(_scaling_pair(n_small, corpus_path, nq, kind))
             # per-pair efficiency: the N sample integrates the same host
             # window the 4N repetitions cover, so MEAN of the 4N reps is
-            # the matched estimator. Best pair reported (host state can
-            # still differ between pairs); every raw value is in the JSON.
+            # the matched estimator. summarize_pairs picks the reported
+            # pair (host state can still differ between pairs); every raw
+            # value is in the JSON.
             return [
                 {
                     "build_small": round(b_s, 2), "query_small": round(q_s, 2),
@@ -638,28 +639,9 @@ def main():
                 for b_s, q_s, b_b, q_b in pairs
             ]
 
-        def summarize(pair_stats, n_docs, nq):
-            best_b = max(pair_stats, key=lambda p: p["build_eff"])
-            best_q = max(pair_stats, key=lambda p: p["query_eff"])
-            b_small, b_big = best_b["build_small"], mean(best_b["build_big_reps"])
-            q_small, q_big = best_q["query_small"], mean(best_q["query_big_reps"])
-            return b_small, b_big, q_small, q_big, {
-                "n_docs": n_docs,
-                "n_queries": nq,
-                "cores": {"N": n_small, "4N": n_big, "pinned": True,
-                          "concurrent_pair": True},
-                "pairs": pair_stats,
-                "build_rows_per_sec": {f"local{n_small}": round(n_docs / b_small, 1),
-                                       f"local{n_big}": round(n_docs / b_big, 1)},
-                "query_qps": {f"local{n_small}": round(nq / q_small, 1),
-                              f"local{n_big}": round(nq / q_big, 1)},
-                "build_efficiency": best_b["build_eff"],
-                "query_efficiency": best_q["query_eff"],
-            }
-
         corpus_path = _gen_scaling_corpus(synth_docs, cpus)
-        b_small, b_big, q_small, q_big, scaling = summarize(
-            run_pairs(corpus_path, nq, n_runs, "code"), synth_docs, nq)
+        b_small, b_big, q_small, q_big, scaling = summarize_pairs(
+            run_pairs(corpus_path, nq, n_runs, "code"), synth_docs, nq, n_small)
         timings[f"synth_build_local{n_small}"] = b_small
         timings[f"synth_build_local{n_big}"] = b_big
         timings[f"synth_query_local{n_small}"] = q_small
@@ -673,15 +655,18 @@ def main():
         # is decode-bandwidth-heavy, and on a single box both tiers of
         # a pair share one memory controller, so its per-pair noise
         # band is the widest of the four gates (raw pairs observed
-        # 0.786-0.96 across full runs at a true mean ~0.84; every raw
-        # leg is recorded in the JSON, best pair reported).
+        # 0.786-0.96 across full runs at a true mean ~0.84). The gate
+        # reads the MEDIAN pair — extra pairs then cut variance instead
+        # of inflating a best-of-N — with the spread beside it; every
+        # raw leg is recorded in the JSON.
         if os.environ.get("SPARK_GRAFT_SCALING_ZIPF", "1") != "0":
             zipf_docs = int(os.environ.get("SPARK_GRAFT_ZIPF_DOCS", "120000"))
             nq_zipf = int(os.environ.get("SPARK_GRAFT_SCALING_ZIPF_QUERIES", "8192"))
             zruns = int(os.environ.get("SPARK_GRAFT_SCALING_ZIPF_RUNS", "3"))
             zpath = _gen_scaling_corpus(zipf_docs, cpus, kind="zipf")
-            zb_s, zb_b, zq_s, zq_b, zsc = summarize(
-                run_pairs(zpath, nq_zipf, zruns, "zipf"), zipf_docs, nq_zipf)
+            zb_s, zb_b, zq_s, zq_b, zsc = summarize_pairs(
+                run_pairs(zpath, nq_zipf, zruns, "zipf"), zipf_docs, nq_zipf,
+                n_small, pick="median")
             timings[f"zipf_build_local{n_small}"] = zb_s
             timings[f"zipf_build_local{n_big}"] = zb_b
             timings[f"zipf_query_local{n_small}"] = zq_s
@@ -713,6 +698,45 @@ def main():
     except OSError:
         full_path = None
     print(json.dumps(slim_output(out, full_path)))
+
+
+def summarize_pairs(pair_stats: list, n_docs: int, nq: int, n_small: int,
+                    pick: str = "best"):
+    """Fold a scaling leg's N/4N pairs into its reported numbers.
+
+    ``pick='best'`` reports the pair with the highest efficiency;
+    ``pick='median'`` the median pair (the lower middle one for an even
+    count), so repeated pairs reduce variance instead of biasing the
+    gate upward. Either way the min/max over all pairs is reported as
+    ``*_efficiency_spread``."""
+    mean = lambda xs: sum(xs) / len(xs)
+
+    def chosen(key):
+        ranked = sorted(pair_stats, key=lambda p: p[key])
+        return ranked[-1] if pick == "best" else ranked[(len(ranked) - 1) // 2]
+
+    sel_b, sel_q = chosen("build_eff"), chosen("query_eff")
+    b_small, b_big = sel_b["build_small"], mean(sel_b["build_big_reps"])
+    q_small, q_big = sel_q["query_small"], mean(sel_q["query_big_reps"])
+    spread = lambda key: [min(p[key] for p in pair_stats),
+                          max(p[key] for p in pair_stats)]
+    n_big = 4 * n_small
+    return b_small, b_big, q_small, q_big, {
+        "n_docs": n_docs,
+        "n_queries": nq,
+        "cores": {"N": n_small, "4N": n_big, "pinned": True,
+                  "concurrent_pair": True},
+        "pairs": pair_stats,
+        "build_rows_per_sec": {f"local{n_small}": round(n_docs / b_small, 1),
+                               f"local{n_big}": round(n_docs / b_big, 1)},
+        "query_qps": {f"local{n_small}": round(nq / q_small, 1),
+                      f"local{n_big}": round(nq / q_big, 1)},
+        "pick": pick,
+        "build_efficiency": sel_b["build_eff"],
+        "build_efficiency_spread": spread("build_eff"),
+        "query_efficiency": sel_q["query_eff"],
+        "query_efficiency_spread": spread("query_eff"),
+    }
 
 
 def slim_output(out: dict, full_path=None) -> dict:

@@ -1,12 +1,12 @@
 """Query-relation freezing for the Catalyst scorers.
 
-The scorers freeze their tokenized-query relation with ONE collect
-(operators/search.materialize_query_relation): every consumer — the
-IN-pushdown term collect and the broadcast scoring join — reads the
-same frozen driver-side rows, so a non-deterministic queries source
-can never be re-evaluated into an inconsistent term set, results
-collected LATE (after many other searches) included. Serving sessions
-therefore accumulate no cached query relations at all.
+The scorers freeze their query relation with ONE collect (BM25:
+operators/search.query_term_map; cosine: materialize_query_relation):
+every consumer — the IN-pushdown term list and the broadcast scoring
+join — reads the same frozen driver-side rows, so a non-deterministic
+queries source can never be re-evaluated into an inconsistent term
+set, results collected LATE (after many other searches) included.
+Serving sessions therefore accumulate no cached query relations at all.
 
 (The earlier bounded persist registry — pin_query_relation — was
 removed in r05: no product caller remained after both scorers moved to

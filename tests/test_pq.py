@@ -107,6 +107,33 @@ def test_geometry_validation(emb):
         pq.sampled_pq_codebooks(df.limit(3), M, K)
 
 
+def test_codebook_geometry_checked_at_driver(emb):
+    """Externally supplied codebooks whose m * dsub does not tile the
+    vector dimension are refused by every entry point with a
+    descriptive driver-side error, before any kernel runs."""
+    df, _ = emb
+    cb = pq.sampled_pq_codebooks(df, M, K)
+    bad = cb[:, :, :-1]  # m * dsub = 28 != 32
+    cents = train_ivf_centroids(df, 4, n_iter=1)
+    with pytest.raises(ValueError, match="do not tile 32-dim"):
+        pq.pq_encode(df, bad)
+    with pytest.raises(ValueError, match="do not tile 32-dim"):
+        pq.pq_adc_topk(df, [1, 2], k=3, codebooks=bad)
+    with pytest.raises(ValueError, match="do not tile 32-dim"):
+        pq.ivf_pq_topk(df, [1, 2], k=3, centroids=cents, codebooks=bad)
+
+
+def test_adc_topk_rejects_residual_codes(emb):
+    """Residual pq_encode output carries centroid_id; scoring it with
+    flat LUTs would mis-rank silently, so pq_adc_topk refuses it."""
+    df, _ = emb
+    cents = train_ivf_centroids(df, 4, n_iter=1)
+    cb = pq.train_pq_codebooks(df, M, K, n_iter=1, coarse_centroids=cents)
+    codes = pq.pq_encode(df, cb, coarse_centroids=cents)
+    with pytest.raises(ValueError, match="centroid_id"):
+        pq.pq_adc_topk(df, [1, 2], k=3, codebooks=cb, codes=codes)
+
+
 def test_encode_differential(emb):
     df, mat = emb
     cb = pq.sampled_pq_codebooks(df, M, K)

@@ -142,6 +142,44 @@ def test_wand_prunes_on_zipf_corpus(spark, zipf_index):
     assert stats["blocks_decoded"] < stats["block_rows"], stats
 
 
+def _jobs_run_by(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_wand_lookup_job_budget(spark, zipf_index):
+    """A 4-query lookup on a cached, non-resident index costs at most
+    the queries collect, the term broadcast, the two scoring stages and
+    the result — no tokenize job, no span probe, no group broadcast.
+    The span is probed at most once per index handle."""
+    import dataclasses
+
+    from textsearch_spark.operators.wand import _default_n_buckets, _default_query_groups
+
+    corpus, idx = zipf_index
+    assert idx.prebucket_n is None and idx.span is not None
+    qdf = _zipf_queries(spark, corpus, 4, seed=5)
+    # the query-group fan-out is on this path and must add no job
+    assert _default_query_groups(idx, _default_n_buckets(idx)) > 1
+    search_bm25_wand(idx, qdf, 10).collect()  # warm codegen and workers
+    n = _jobs_run_by(spark, lambda: search_bm25_wand(idx, qdf, 10).collect())
+    assert n <= 5, n
+
+    fresh = dataclasses.replace(idx, span=None)
+    assert _jobs_run_by(spark, lambda: _default_n_buckets(fresh)) == 1
+    assert fresh.span == idx.span
+    assert _jobs_run_by(spark, lambda: _default_n_buckets(fresh)) == 0
+
+
 def test_wand_chunked_differential(spark, zipf_index):
     """Chunked large-batch driver must be row-identical to the unchunked
     path (queries are independent; chunking only bounds the per-chunk

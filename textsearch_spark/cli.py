@@ -147,6 +147,7 @@ def main(argv=None):
                                    text_col=args.text_col,
                                    vocab_filter=args.vocab_filter)
             idx.blocks = build_posting_blocks(idx.postings, span=args.block_span)
+            idx.span = args.block_span
             if args.backend == "txnlog":
                 from .sources.txnlog import save_index_txn
 

@@ -8,58 +8,31 @@ per-row Python on the driver.
 
 from __future__ import annotations
 
-from typing import Union
-
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType
 
 from ..config import TextConfig
-from .normalize import normalize_text
 from .tokenizer import tokenize
-
-
-def tokenize_udf(cfg: TextConfig):
-    """Returns a pandas UDF ``string -> array<string>`` tokenizing with
-    ``cfg``. The config is captured in the closure and shipped once per
-    task via Spark's broadcast of the serialized function."""
-
-    @pandas_udf(ArrayType(StringType()))
-    def _tok(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: tokenize(cfg, t))
-
-    return _tok
-
-
-def tokenize_multi_udf(cfg: TextConfig):
-    """Tokenize an ``array<string>`` multi-message document into one
-    token stream (reference: src/tokenize.jl:50-61)."""
-
-    @pandas_udf(ArrayType(StringType()))
-    def _tok(msgs: pd.Series) -> pd.Series:
-        return msgs.map(lambda arr: tokenize(cfg, None if arr is None else list(arr)))
-
-    return _tok
-
-
-def normalize_udf(cfg: TextConfig, limits: bool = False):
-    """Returns a pandas UDF ``string -> string`` applying only the
-    normalization pipeline (reference: src/normalize.jl:50-66)."""
-
-    @pandas_udf(StringType())
-    def _norm(texts: pd.Series) -> pd.Series:
-        return texts.map(lambda t: "" if t is None else normalize_text(cfg, t, limits=limits))
-
-    return _norm
 
 
 def with_tokens(df: DataFrame, cfg: TextConfig, *, text_col: str = "text",
                 out_col: str = "tokens", multi: bool = False) -> DataFrame:
-    """Adds an ``array<string>`` token column."""
-    udf = tokenize_multi_udf(cfg) if multi else tokenize_udf(cfg)
-    return df.withColumn(out_col, udf(F.col(text_col)))
+    """Adds an ``array<string>`` token column: a pandas UDF over the
+    tokenizer kernel, ``cfg`` captured in the closure and shipped once
+    per task. ``multi=True`` tokenizes an ``array<string>``
+    multi-message document into one token stream (reference:
+    src/tokenize.jl:50-61)."""
+
+    @pandas_udf(ArrayType(StringType()))
+    def _tok(texts: pd.Series) -> pd.Series:
+        if multi:
+            return texts.map(lambda a: tokenize(cfg, None if a is None else list(a)))
+        return texts.map(lambda t: tokenize(cfg, t))
+
+    return df.withColumn(out_col, _tok(F.col(text_col)))
 
 
 def bow_long(df: DataFrame, cfg: TextConfig, *, doc_col: str = "doc_id",

@@ -13,8 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.weighting import EMPTY_SENTINEL, VectorModel, vectorize
-from .search import (materialize_query_relation, prune_postings_by_terms,
-                     salted_topk)
+from .search import materialize_query_relation, prune_postings_to, salted_topk
 
 
 def search_cosine(
@@ -34,12 +33,10 @@ def search_cosine(
         F.col(id_col), F.col("token"), F.col("weight").alias("__qw")
     )
     # evaluate ONCE, freeze on the driver: qv feeds both the
-    # IN-pushdown collect and the scoring join (see search_bm25 — same
-    # double-consumption and non-deterministic-source hazard; the
-    # collect is bounded by batch size x distinct query terms).
-    qv = materialize_query_relation(qv)
-    p = corpus_vectors.filter(F.col("token") != EMPTY_SENTINEL)
-    p = prune_postings_by_terms(p, qv)
+    # IN-pushdown and the scoring join (see search_bm25 — same
+    # double-consumption and non-deterministic-source hazard).
+    qv, terms = materialize_query_relation(qv)
+    p = prune_postings_to(corpus_vectors.filter(F.col("token") != EMPTY_SENTINEL), terms)
     scored = (
         p.join(F.broadcast(qv), "token")
         .groupBy(id_col, "doc_id")

@@ -78,6 +78,15 @@ def _check_geometry(dim: int, m: int) -> int:
     return dim // m
 
 
+def _check_codebooks(cb: np.ndarray, dim: int) -> None:
+    """Driver-side: m subspaces of dsub dims must tile the vector, or
+    the kernels fail deep in numpy on the executors."""
+    if cb.ndim != 3 or cb.shape[0] * cb.shape[2] != dim:
+        raise ValueError(
+            f"codebooks of shape {cb.shape} (m, n_codewords, dsub) do not "
+            f"tile {dim}-dim vectors: need m * dsub == {dim}")
+
+
 def sampled_pq_codebooks(
     embeddings: DataFrame,
     m: int = 4,
@@ -269,6 +278,9 @@ def pq_encode(
     no separate ``ivf_assign`` join."""
     spark = embeddings.sparkSession
     cb = np.asarray(codebooks, dtype=np.float64)
+    first = embeddings.select(vec_col).dropna().limit(1).collect()
+    if first:
+        _check_codebooks(cb, len(first[0][0]))
     halfsq = _codebook_halfsq(cb)
     res_parts = (_coarse_parts(coarse_centroids)
                  if coarse_centroids is not None else None)
@@ -313,6 +325,9 @@ def pq_distortion(
     emitting a (count, error-sum) partial per partition."""
     spark = embeddings.sparkSession
     cb = np.asarray(codebooks, dtype=np.float64)
+    first = embeddings.select(vec_col).dropna().limit(1).collect()
+    if first:
+        _check_codebooks(cb, len(first[0][0]))
     halfsq = _codebook_halfsq(cb)
     m, _, dsub = cb.shape
     res_parts = (_coarse_parts(coarse_centroids)
@@ -454,9 +469,15 @@ def pq_adc_topk(
     <= max(k, rerank) * n_queries * n_partitions rows."""
     spark = embeddings.sparkSession
     cb = np.asarray(codebooks, dtype=np.float64)
+    if codes is not None and "centroid_id" in codes.columns:
+        # residual codes under flat LUTs would silently mis-rank
+        raise ValueError(
+            "codes= carries a centroid_id column (residual pq_encode "
+            "output); score it with ivf_pq_topk(residual=True)")
     q_ids, q_mat, _ = _collect_queries(embeddings, query_ids, id_col, vec_col)
     if q_mat is None:
         return _empty_result(spark)
+    _check_codebooks(cb, q_mat.shape[1])
     if codes is None:
         codes = pq_encode(embeddings, cb, id_col=id_col, vec_col=vec_col)
     luts = _query_luts(q_mat, cb)
@@ -543,6 +564,7 @@ def ivf_pq_topk(
     q_ids, q_mat, q_raw = _collect_queries(embeddings, query_ids, id_col, vec_col)
     if q_mat is None:
         return _empty_result(spark)
+    _check_codebooks(cb, q_mat.shape[1])
     if assigned_codes is None:
         if residual:
             assigned_codes = pq_encode(embeddings, cb, coarse_centroids=c_mat,

@@ -1,16 +1,21 @@
 """Top-k BM25 retrieval — the query path (reference lifecycle C, SURVEY §3C).
 
-Two physical strategies, rank-identical by construction:
+Both BM25 scorers share one driver-side query front end,
+:func:`query_term_map`: ONE collect of the (id, text) batch, tokenized
+on the driver by the kernel the build's Arrow UDFs run — no
+Python-worker job, no shuffle. Query-side term frequency is ignored
+(the reference, src/bm25.jl:29).
 
-- ``search_bm25`` (this module): the Catalyst-native path. Query texts
-  are tokenized with the index's TextConfig, de-duplicated (the
-  reference ignores query-side term frequency, src/bm25.jl:29), then
+Two physical strategies over that map, rank-identical by construction:
+
+- ``search_bm25`` (this module): the reference differential and oracle
+  scorer. The map becomes a frozen local ``(id, token)`` relation
   broadcast-joined against the long-form postings; the per-posting
   ``impact`` column is pre-folded BM25, so scoring is a sum-aggregate
   and top-k is a window — all whole-stage-codegen, no Python.
 - ``search_bm25_wand`` (operators/wand.py): block-max WAND over the
-  compressed posting blocks inside ``applyInPandas``, for the
-  at-scale path. Differential-tested against this one.
+  compressed posting blocks inside ``applyInPandas``, the serving
+  path. Differential-tested against this one.
 
 Tie order is pinned to ascending docID (the reference's KnnResult scans
 in ascending docID and keeps the earlier doc on equal scores,
@@ -21,91 +26,82 @@ from __future__ import annotations
 
 from typing import Optional
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
-from ..functions.udfs import exploded_tokens
+from ..functions.tokenizer import tokenize
 from ..plans.build import BM25Index
 
-def materialize_query_relation(df: DataFrame) -> DataFrame:
-    """Evaluate the (bounded) tokenized-query relation EXACTLY ONCE —
-    one collect — and rebuild it as a local-rows DataFrame.
 
-    Every downstream consumer (the IN-pushdown term collect, the
-    broadcast scoring join) then reads frozen driver-side rows, so a
-    non-deterministic queries source (sample(), unordered limit())
-    can never be re-evaluated into an inconsistent term set — not by
-    a second consumer, not by cache eviction, not by executor loss.
-    This is the same driver-materialization contract as the WAND
-    scorer's query map (operators/wand.py): bounded by batch size x
-    distinct query terms; callers with 10^6+ query batches use the
-    chunked drivers. Earlier designs (localCheckpoint: executor loss
-    fails the query; bounded persist registry: eviction re-exposed
-    the recompute hazard for results collected late) both lost a
-    property this keeps."""
+def materialize_query_relation(df: DataFrame) -> tuple[DataFrame, list]:
+    """Evaluate a (bounded) query relation EXACTLY ONCE — one collect —
+    and return it as a local-rows DataFrame plus its sorted distinct
+    ``token`` list for the IN-pushdown. Every consumer reads the frozen
+    rows, so a non-deterministic queries source (sample(), unordered
+    limit()) can never be re-evaluated into an inconsistent term set.
+    The cosine scorer freezes its query vectors this way; the BM25
+    scorers build theirs from :func:`query_term_map`'s one collect."""
     rows = df.collect()
-    return df.sparkSession.createDataFrame(rows, df.schema)
+    return (df.sparkSession.createDataFrame(rows, df.schema),
+            sorted({r.token for r in rows}))
 
 
-def query_tokens(index: BM25Index, queries: DataFrame, *, query_col: str = "qtext",
-                 id_col: str = "query_id", typo_tolerant: bool = False,
-                 maxdist: float = 0.7) -> DataFrame:
-    """(query_id, token) — distinct query terms. OOV terms drop at the
-    postings join (token2id -> 0 -> skipped in the reference,
-    src/voc.jl:21, src/bow.jl:14-23).
+def query_term_map(index: BM25Index, queries: DataFrame, *, query_col: str = "qtext",
+                   id_col: str = "query_id", typo_tolerant: bool = False,
+                   maxdist: float = 0.7) -> dict:
+    """{query_id: tuple(sorted distinct tokens)} — ONE ``collect`` of
+    ``(id_col, query_col)``, tokenized on the driver with ``index.cfg``
+    by the kernel the build's Arrow UDFs wrap. Rows sharing an id pool
+    their terms; queries with no terms are absent. OOV terms stay and
+    drop at the postings join (token2id -> 0 -> skipped in the
+    reference, src/voc.jl:21, src/bow.jl:14-23).
 
     ``typo_tolerant=True`` swaps the exact token2id for the reference's
-    QgramsLookup-as-token2id (src/approxvoc.jl:46-57): each query term
-    resolves to its nearest vocabulary token under character-3-gram
-    Jaccard distance (exact hits at distance 0), terms whose best match
-    exceeds ``maxdist`` drop. Cost shape: one bounded set-similarity
-    join over the distinct term set of the batch against the PERSISTED
-    vocabulary q-gram table (``index.qgrams``, built once at save time
-    like the reference's construct-once QgramsLookup); only a
-    never-persisted index falls back to deriving it from the vocabulary
-    inline."""
-    toks = (
-        exploded_tokens(queries, index.cfg, doc_col=id_col, text_col=query_col)
-        .select(id_col, "token")
-        .distinct()
-    )
-    if not typo_tolerant:
-        return toks
-    from .approxvoc import approx_lookup
+    QgramsLookup-as-token2id (src/approxvoc.jl:46-57): the batch's
+    distinct terms resolve in ONE ``approx_lookup`` join against the
+    persisted vocabulary q-gram table (``index.qgrams``; derived inline
+    for a never-persisted index) to their nearest vocabulary token
+    under 3-gram Jaccard distance, terms past ``maxdist`` drop, and the
+    matches map back to queries on the driver."""
+    raw: dict = {}
+    for qid, text in queries.select(id_col, query_col).collect():
+        toks = tokenize(index.cfg, text)
+        if toks:
+            raw.setdefault(qid, set()).update(toks)
+    if typo_tolerant and raw:
+        from .approxvoc import approx_lookup
 
-    resolved = approx_lookup(
-        index.vocab,
-        toks.select(F.col("token").alias("qtoken")).distinct(),
-        maxdist=maxdist,
-        qgram_index=index.qgrams,
-    )
-    return (
-        toks.join(resolved, toks.token == resolved.qtoken)
-        .select(id_col, F.col("match_token").alias("token"))
-        .distinct()
-    )
+        terms = sorted(set().union(*raw.values()))
+        qtok = index.spark.createDataFrame(pd.DataFrame({"qtoken": terms}), "qtoken string")
+        match: dict = {}
+        for r in approx_lookup(index.vocab, qtok, maxdist=maxdist,
+                               qgram_index=index.qgrams).select("qtoken", "match_token").collect():
+            match.setdefault(r.qtoken, set()).add(r.match_token)
+        raw = {qid: set().union(*(match.get(t, ()) for t in ts)) for qid, ts in raw.items()}
+    return {qid: tuple(sorted(ts)) for qid, ts in raw.items() if ts}
 
 
 PRUNE_MAX_TERMS = 500
 
 
-def prune_postings_by_terms(postings: DataFrame, q: DataFrame) -> DataFrame:
+def prune_postings_to(postings: DataFrame, terms: list) -> DataFrame:
     """Push the distinct query-term set down to the postings scan as an
     IN filter. On a persisted index (parquet/Iceberg sorted by token)
     this prunes row groups / files via min-max statistics — the
     distributed analogue of the reference fetching only the query
     terms' lists (select_posting_lists, src/bm25invfilesearch.jl:38).
 
-    Skipped for batches with many distinct terms: the driver
-    round-trip plus a thousands-of-literals Catalyst expression costs
-    seconds of SERIAL planning time while pruning almost nothing (a
-    dense batch touches most row groups anyway), and the downstream
-    broadcast join restricts tokens regardless — results are identical
-    either way. 500 keeps the pushdown for the common small-batch case."""
-    toks = [r.token for r in q.select("token").distinct().limit(PRUNE_MAX_TERMS + 1).collect()]
-    if 0 < len(toks) <= PRUNE_MAX_TERMS:
-        return postings.filter(F.col("token").isin(toks))
+    Skipped for batches with many distinct terms: a thousands-of-literals
+    Catalyst expression costs seconds of SERIAL planning time while
+    pruning almost nothing (a dense batch touches most row groups
+    anyway), and the downstream broadcast join restricts tokens
+    regardless — results are identical either way. 500 keeps the
+    pushdown for the common small-batch case."""
+    if 0 < len(terms) <= PRUNE_MAX_TERMS:
+        return postings.filter(F.col("token").isin(terms))
     return postings
 
 
@@ -130,22 +126,20 @@ def search_bm25(
     pushed-down predicate on list length — e.g. skipping stop-wordish
     very long lists at query time.
     """
-    q = query_tokens(index, queries, query_col=query_col, id_col=id_col,
-                     typo_tolerant=typo_tolerant, maxdist=maxdist)
-    # evaluate ONCE, freeze on the driver: q is consumed twice (the
-    # IN-pushdown collect below and the scoring join), so the expensive
-    # tokenization — and the whole typo-tolerant similarity join — must
-    # not re-run per consumer, and a non-deterministic queries source
-    # must not be able to yield a prune term set inconsistent with the
-    # join's (silent truncation). See materialize_query_relation.
-    q = materialize_query_relation(q)
+    qmap = query_term_map(index, queries, query_col=query_col, id_col=id_col,
+                          typo_tolerant=typo_tolerant, maxdist=maxdist)
+    # FROZEN driver-side rows from the map: the IN-pushdown and the join
+    # see one evaluation of a (possibly non-deterministic) source
+    q = index.spark.createDataFrame(
+        [(qid, t) for qid, ts in qmap.items() for t in ts],
+        StructType([queries.schema[id_col], StructField("token", StringType())]))
 
     p = index.postings
     if accept_min_ndocs is not None:
         p = p.filter(F.col("ndocs") >= accept_min_ndocs)
     if accept_max_ndocs is not None:
         p = p.filter(F.col("ndocs") <= accept_max_ndocs)
-    p = prune_postings_by_terms(p, q)
+    p = prune_postings_to(p, sorted({t for ts in qmap.values() for t in ts}))
 
     # queries are the tiny side: broadcast them so the big postings
     # relation is never shuffled — the join degenerates to a hash-probe

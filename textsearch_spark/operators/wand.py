@@ -4,9 +4,11 @@ Replaces the reference's k-way union merge + KnnResult
 (xmerge! at src/bm25invfilesearch.jl:37-45, onmatch! at :10-24) with a
 distributed, pruned equivalent:
 
-1. query terms are aggregated per token (``token -> [query_ids]``, a
-   tiny broadcast side) and joined to the block table — the distributed
-   ``select_posting_lists``. Each candidate row is a distinct
+1. the query batch is tokenized ON THE DRIVER (search.query_term_map)
+   into a broadcast ``{query_id: term tuple}`` the kernel reads; the
+   batch's distinct terms, an Arrow-built relation the JVM reads with
+   no Python worker, are broadcast-joined to the block table — the
+   distributed ``select_posting_lists``. Each candidate row is a distinct
    (token, block), NOT a (query, token, block): a block blob crosses
    the wire and is decoded **once** no matter how many queries in the
    batch share the term;
@@ -28,11 +30,16 @@ Scores are float64 and per-doc summation is done in a fixed token
 order, so results are rank-identical to the naive Catalyst scorer
 (operators/search.py) — differential-tested in tests/test_wand.py.
 
+Per-call Spark job budget (default knobs, span known to the handle):
+the queries collect, the term broadcast, the two scoring stages (the
+bucket exchange feeding the kernel, the top-k window exchange) and the
+result — five jobs, pinned in tests/test_wand.py.
+
 Scale notes: the shuffle key is the bucket, so per-task memory is
 (candidate blocks / n_buckets) regardless of query-batch size; the
 per-query state inside the kernel is a bounded top-k. For very large
 query batches the caller splits the batch (queries are independent),
-keeping the broadcast token->query_ids map small.
+keeping the broadcast query map small.
 """
 
 from __future__ import annotations
@@ -48,8 +55,8 @@ from pyspark.sql.window import Window
 from ..config import FoldedBM25
 from ..functions.bm25 import tokenscore_np
 from ..functions.codec import decode_block
-from ..plans.build import BM25Index
-from .search import query_tokens
+from ..plans.build import BM25Index, block_span
+from .search import prune_postings_to, query_term_map
 
 _OUT_SCHEMA = "query_id long, doc_id long, score double"
 
@@ -316,15 +323,14 @@ def _bucket_kernel(bm25: FoldedBM25, k: int, bq, query_groups: int,
 
 def _default_n_buckets(index: BM25Index) -> int:
     """Estimate the block-id space from fit-time stats (ids start at
-    the low doc ids, so n_blocks ~= n_docs/span); one tiny limit(1)
-    job fetches the span. Bucket so each bucket holds >=
+    the low doc ids, so n_blocks ~= n_docs/span); the span comes from
+    :func:`block_span`, so at most the handle's first call probes it.
+    Bucket so each bucket holds >=
     MIN_RANGES_PER_BUCKET (32) doc ranges — pruning depth first;
     :func:`_default_query_groups` then restores task parallelism from
     whatever bucket count this picks (the two defaults are designed as
     a pair — callers with no knobs get both)."""
-    span_row = index.blocks.select("span").limit(1).collect()
-    span = int(span_row[0][0]) if span_row else 4096
-    n_blocks = max(1, -(-int(index.n_docs) // span))
+    n_blocks = max(1, -(-int(index.n_docs) // block_span(index)))
     shuffle = int(index.spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return max(1, min(shuffle, n_blocks // MIN_RANGES_PER_BUCKET))
 
@@ -445,25 +451,12 @@ def _default_query_groups(index: BM25Index, n_buckets: int) -> int:
     return max(1, min(MAX_DEFAULT_QUERY_GROUPS, shuffle // max(1, n_buckets)))
 
 
-def search_bm25_wand(
-    index: BM25Index,
-    queries: DataFrame,
-    k: int = 10,
-    *,
-    query_col: str = "qtext",
-    id_col: str = "query_id",
-    n_buckets: Optional[int] = None,
-    query_groups: Optional[int] = None,
-    group_mode: str = "shuffle",
-    typo_tolerant: bool = False,
-    maxdist: float = 0.7,
-    prune_scan: bool = True,
-    counters: Optional[WandCounters] = None,
-    accept_min_ndocs: Optional[int] = None,
-    accept_max_ndocs: Optional[int] = None,
-    _bq_out: Optional[list] = None,
-) -> DataFrame:
+def search_bm25_wand(index: BM25Index, queries: DataFrame, k: int = 10,
+                     **knobs) -> DataFrame:
     """(query_id, rank, doc_id, score) — rank-identical to search_bm25.
+
+    Keyword knobs are :func:`_wand_plan`'s: those of search_bm25,
+    ``prune_scan``, ``counters`` and the scoring-stage shape below.
 
     Two independent knobs shape the scoring stage — BOTH have adaptive
     defaults, so knob-free callers get near-optimal parallelism on
@@ -511,6 +504,29 @@ def search_bm25_wand(
     of 8 cost the 8-core tier ~40% query efficiency purely to one-wave
     straggler imbalance).
     """
+    return _wand_plan(index, queries, k, **knobs)[0]
+
+
+def _wand_plan(
+    index: BM25Index,
+    queries: DataFrame,
+    k: int = 10,
+    *,
+    query_col: str = "qtext",
+    id_col: str = "query_id",
+    n_buckets: Optional[int] = None,
+    query_groups: Optional[int] = None,
+    group_mode: str = "shuffle",
+    typo_tolerant: bool = False,
+    maxdist: float = 0.7,
+    prune_scan: bool = True,
+    counters: Optional[WandCounters] = None,
+    accept_min_ndocs: Optional[int] = None,
+    accept_max_ndocs: Optional[int] = None,
+):
+    """:func:`search_bm25_wand`'s plan plus the query-map broadcast it
+    reads (None for an empty batch), so a caller that materializes the
+    result can release the broadcast explicitly."""
     assert index.blocks is not None, "build_posting_blocks first (or io.load_index)"
     from .postings import validate_blocks_schema
 
@@ -559,21 +575,15 @@ def search_bm25_wand(
         # Results are identical by construction (see group_mode docs).
         group_mode = "kernel"
 
-    q = query_tokens(index, queries, query_col=query_col, id_col=id_col,
-                     typo_tolerant=typo_tolerant, maxdist=maxdist)
-    if id_col != "query_id":
-        q = q.withColumnRenamed(id_col, "query_id")
-
-    # ONE pre-job: collect the distinct (query_id, token) relation —
-    # bounded by batch_size x query terms (callers split huge batches;
-    # queries are independent). It becomes (a) a broadcast VARIABLE
-    # {query_id: term tuple} read by the kernel, and (b) the distinct
-    # term set for the candidate join + optional scan pushdown. The
-    # candidate rows stay BARE (token, block) — no per-row id lists.
-    qrows = q.collect()
-    raw: dict = {}
-    for r in qrows:
-        raw.setdefault(r.query_id, []).append(r.token)
+    # ONE pre-job: the driver-side front end collects the query texts
+    # and tokenizes them into {query_id: term tuple} — bounded by
+    # batch_size x query terms (callers split huge batches; queries are
+    # independent). It becomes (a) a broadcast VARIABLE read by the
+    # kernel, and (b) the distinct term set for the candidate join +
+    # optional scan pushdown. The candidate rows stay BARE
+    # (token, block) — no per-row id lists.
+    raw = query_term_map(index, queries, query_col=query_col, id_col=id_col,
+                         typo_tolerant=typo_tolerant, maxdist=maxdist)
     if not raw:
         # empty result with the CALLER's id type, not a hardcoded long
         return (
@@ -581,7 +591,7 @@ def search_bm25_wand(
             .withColumn("rank", F.lit(None).cast("int"))
             .withColumn("doc_id", F.lit(None).cast("long"))
             .withColumn("score", F.lit(None).cast("double"))
-        )
+        ), None
     # the kernel wants integral ids (int64 output arrays + the
     # query_groups hash); non-integral ids (strings, decimals — fully
     # supported by search_bm25, and this path is documented as
@@ -589,27 +599,15 @@ def search_bm25_wand(
     # back by a broadcast join after the kernel
     int_ids = all(isinstance(i, int) and not isinstance(i, bool) for i in raw)
     if int_ids:
-        qmap = {int(i): tuple(sorted(ts)) for i, ts in raw.items()}
+        qmap = raw
         idmap = None
     else:
-        from pyspark.sql.types import LongType, StructField, StructType
-
         orig = sorted(raw)
-        qmap = {j: tuple(sorted(raw[o])) for j, o in enumerate(orig)}
+        qmap = {j: raw[o] for j, o in enumerate(orig)}
         idmap = spark.createDataFrame(
-            [(j, o) for j, o in enumerate(orig)],
-            StructType([
-                StructField("query_id", LongType()),
-                StructField("__orig_id", queries.schema[id_col].dataType),
-            ]),
-        )
+            list(enumerate(orig)),
+            f"query_id long, __orig_id {queries.schema[id_col].dataType.simpleString()}")
     bq = spark.sparkContext.broadcast(qmap)
-    if _bq_out is not None:
-        # hand the broadcast to the caller for explicit release —
-        # search_bm25_wand_chunked unpersists each chunk's map after
-        # its write instead of pinning every chunk's map on the
-        # executors until driver GC
-        _bq_out.append(bq)
     terms = sorted({t for ts in qmap.values() for t in ts})
 
     blocks = index.blocks
@@ -629,13 +627,13 @@ def search_bm25_wand(
         blocks = blocks.filter(F.col("ndocs") >= accept_min_ndocs)
     if accept_max_ndocs is not None:
         blocks = blocks.filter(F.col("ndocs") <= accept_max_ndocs)
-    from .search import PRUNE_MAX_TERMS
-
-    if prune_scan and len(terms) <= PRUNE_MAX_TERMS:
+    if prune_scan:
         # literal IN reaches parquet/Iceberg row-group min-max pruning
         # on a persisted index; pointless for cached in-memory blocks
-        blocks = blocks.filter(F.col("token").isin(terms))
-    qtok = spark.createDataFrame([(t,) for t in terms], "token string")
+        blocks = prune_postings_to(blocks, terms)
+    # Arrow-built: the JVM reads the term relation directly, with no
+    # pickled Python RDD (and no Python worker) behind the broadcast
+    qtok = spark.createDataFrame(pd.DataFrame({"token": terms}), "token string")
     cand = blocks.join(F.broadcast(qtok), "token")
     kernel_split = group_mode == "kernel"
     if replicated:
@@ -644,8 +642,10 @@ def search_bm25_wand(
         # crossJoin, the qgrp column aliases the cached replica column
         cand = cand.withColumn("qgrp", F.col("replica").cast("int"))
     elif query_groups > 1 and not kernel_split:
-        groups = spark.range(query_groups).select(F.col("id").cast("int").alias("qgrp"))
-        cand = cand.crossJoin(F.broadcast(groups))
+        # one copy of every candidate row per query group — a generator
+        # inside the scan stage, no second broadcast relation
+        cand = cand.withColumn(
+            "qgrp", F.explode(F.sequence(F.lit(0), F.lit(query_groups - 1))))
     else:
         # kernel mode: ONE task per bucket — blobs ship/decode once;
         # the thread pool inside the kernel supplies the group split
@@ -674,7 +674,7 @@ def search_bm25_wand(
         .filter(F.col("rank") <= k)
         .select(F.col("query_id").alias(id_col), "rank", "doc_id", "score")
     )
-    return out
+    return out, bq
 
 
 def search_bm25_wand_chunked(
@@ -689,9 +689,8 @@ def search_bm25_wand_chunked(
 ) -> DataFrame:
     """WAND search for query batches too large for one driver collect.
 
-    ``search_bm25_wand`` materializes the batch's (query_id, token)
-    relation on the driver (it becomes the broadcast query map); that
-    is bounded and fast for batches up to ~10^4-10^5 queries but not
+    ``search_bm25_wand`` collects and tokenizes the batch on the
+    driver (the map becomes the broadcast query map); that is bounded and fast for batches up to ~10^4-10^5 queries but not
     for a 10^6-row query table. This helper splits the batch into
     ``ceil(n/chunk_size)`` deterministic hash chunks
     (xxhash64(query_id) mod n_chunks — uniform regardless of the id
@@ -727,13 +726,9 @@ def search_bm25_wand_chunked(
     queries = queries.localCheckpoint(eager=True)
     n = queries.select(id_col).distinct().count()
     n_chunks = max(1, -(-n // chunk_size))
-    # resolve the bucket count ONCE: every chunk sees the same index,
-    # so per-chunk span limit(1) jobs would be n_chunks redundant
-    # serial driver round-trips. A prebucketed (partition-resident)
-    # index must keep ITS bucket count — defaulting past it would flip
-    # `resident` off inside every chunk and re-shuffle all candidate
-    # blobs through a fresh exchange once per chunk, the exact
-    # per-batch bandwidth tax prebucket_blocks exists to eliminate
+    # one bucket count for every chunk; a prebucketed index keeps ITS
+    # count, or every chunk would flip `resident` off and re-shuffle
+    # all candidate blobs through a fresh exchange
     kwargs.setdefault("n_buckets",
                       getattr(index, "prebucket_n", None)
                       or _default_n_buckets(index))
@@ -753,15 +748,13 @@ def search_bm25_wand_chunked(
 
     for i in range(n_chunks):
         sub = queries.filter(bucket == i) if n_chunks > 1 else queries
-        slot: list = []
-        res = search_bm25_wand(index, sub, k, id_col=id_col, _bq_out=slot,
-                               **kwargs)
+        res, bq = _wand_plan(index, sub, k, id_col=id_col, **kwargs)
         res.write.mode("overwrite" if i == 0 else "append").parquet(output_path)
-        for b in slot:
+        if bq is not None:
             # the chunk is fully materialized — drop its query-map
             # broadcast from the executors now instead of waiting for
             # driver GC (at 10^4 chunks the pinned maps would otherwise
             # grow executor storage unboundedly)
-            b.unpersist(blocking=False)
+            bq.unpersist(blocking=False)
     spark.catalog.refreshByPath(output_path)
     return spark.read.parquet(output_path)

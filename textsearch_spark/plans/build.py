@@ -69,10 +69,24 @@ class BM25Index:
     # built once per index lifetime (operators.approxvoc.build_qgram_index),
     # saved under qgrams/; None falls back to an inline per-batch build
     qgrams: Optional[DataFrame] = None
+    # the blocks table's doc-id span: set at build/load, else memoized
+    # by block_span(); code swapping in blocks of another span sets it
+    span: Optional[int] = None
 
     @property
     def spark(self) -> SparkSession:
         return self.vocab.sparkSession
+
+
+def block_span(index: BM25Index) -> int:
+    """The blocks table's span — one ``limit(1)`` probe on a handle's
+    first call, none after. An empty table reports the build default."""
+    if index.span is None:
+        from ..operators.postings import DEFAULT_BLOCK_SPAN
+
+        row = index.blocks.select("span").limit(1).collect()
+        index.span = int(row[0][0]) if row else DEFAULT_BLOCK_SPAN
+    return index.span
 
 
 def build_bm25_index(
@@ -232,7 +246,7 @@ def build_bm25_index_direct(
     return BM25Index(
         cfg=cfg, params=params, bm25=bm25, vocab=vocab,
         postings=postings, doclens=doclens, n_docs=n_docs, avgdl=avgdl,
-        blocks=blocks, last_doc=last_doc,
+        blocks=blocks, last_doc=last_doc, span=span,
     )
 
 

@@ -166,6 +166,7 @@ def build_bm25_index_checkpointed(
         )
 
     index.blocks = blocks
+    index.span = block_span
     return index
 
 

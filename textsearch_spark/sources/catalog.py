@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..config import BM25Params, FoldedBM25, TextConfig
-from ..plans.build import BM25Index
+from ..plans.build import BM25Index, block_span
 
 _LOG_SCHEMA = ("op string, batch_id string, commit_id string, "
                "last_doc long, n_block_rows long, committed_at double, "
@@ -275,6 +275,7 @@ def save_index_catalog(index: BM25Index, prefix: str, *,
                    "delta": index.params.delta},
         "n_docs": index.n_docs,
         "avgdl": index.avgdl,
+        "span": block_span(index),  # loads then skip the span probe
     }
     io.create(spark.createDataFrame([(json.dumps(meta, sort_keys=True),)],
                                     "meta_json string"), "meta")
@@ -381,6 +382,7 @@ def load_index_catalog(spark: SparkSession, prefix: str,
         n_docs=meta["n_docs"],
         avgdl=meta["avgdl"],
         blocks=blocks,
+        span=meta.get("span"),
         qgrams=qgrams,
         last_doc=high_water_mark_catalog(spark, prefix, as_of),
     )
@@ -463,7 +465,7 @@ def append_batch_catalog(
 
     t0 = time.time()
     idx = load_index_catalog(spark, prefix)
-    span = int(idx.blocks.select("span").limit(1).collect()[0][0])
+    span = block_span(idx)
     hwm = high_water_mark_catalog(spark, prefix)
     postings, n_new, first_doc, last_doc, docs = compute_batch_postings(
         spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)

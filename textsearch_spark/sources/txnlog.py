@@ -78,7 +78,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import BM25Params, FoldedBM25, TextConfig
-from ..plans.build import BM25Index
+from ..plans.build import BM25Index, block_span
 
 LOG_DIR = "_txnlog"
 DATA_DIR = "data"
@@ -365,6 +365,7 @@ def save_index_txn(index: BM25Index, path: str, *,
                    "delta": index.params.delta},
         "n_docs": index.n_docs,
         "avgdl": index.avgdl,
+        "span": block_span(index),  # loads then skip the span probe
     }
     with open(os.path.join(path, META), "w") as f:
         json.dump(meta, f, indent=1, sort_keys=True)
@@ -507,6 +508,7 @@ def load_index_txn(spark: SparkSession, path: str,
         n_docs=meta["n_docs"],
         avgdl=meta["avgdl"],
         blocks=blocks,
+        span=meta.get("span"),
         qgrams=qgrams,
         last_doc=high_water_mark_txn(path, log),
     )
@@ -600,7 +602,7 @@ def append_batch_txn(
 
     t0 = time.time()
     idx = load_index_txn(spark, index_dir, log0)
-    span = int(idx.blocks.select("span").limit(1).collect()[0][0])
+    span = block_span(idx)
     hwm = high_water_mark_txn(index_dir, log0)
     postings, n_new, first_doc, last_doc, docs = compute_batch_postings(
         spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)

@@ -54,7 +54,7 @@ from pyspark.sql.window import Window
 from ..functions.bm25 import tokenscore_expr
 from ..functions.udfs import bow_long
 from ..operators.postings import build_posting_blocks
-from ..plans.build import POSTING_COLS
+from ..plans.build import POSTING_COLS, block_span
 from ..sources.io import (
     META,
     append_batch_dir,
@@ -366,7 +366,7 @@ def _append_locked(
     t0 = time.time()
     idx = load_index(spark, index_dir)
     assert idx.blocks is not None, "append requires a block index (save with blocks)"
-    span = int(idx.blocks.select("span").limit(1).collect()[0][0])
+    span = block_span(idx)
     hwm = high_water_mark(spark, index_dir)
     postings, n_new, first_doc, last_doc, docs = compute_batch_postings(
         spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)
