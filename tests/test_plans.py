@@ -11,9 +11,12 @@ import io
 from contextlib import redirect_stdout
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from textsearch_spark.config import TextConfig
-from textsearch_spark.operators.search import search_bm25
+from textsearch_spark.operators.search import in_list, search_bm25
 from textsearch_spark.plans.build import build_bm25_index
 from textsearch_spark.sources.io import load_index, save_index
 
@@ -39,6 +42,34 @@ def test_query_terms_pushed_to_postings_scan(spark, persisted_index):
     assert "PushedFilters" in plan
     # the IN(token, ...) predicate must reach the parquet scan
     assert "In(token" in plan or "in(token" in plan.lower()
+
+
+# every Unicode category Python can encode to UTF-8 (surrogates cannot
+# reach a DataFrame), plus the characters a quoting scheme would trip on
+_token = st.one_of(st.text(max_size=6), st.sampled_from(
+    ["'", "\\", "\n", '"', "`", "", "a'b", "c\\d", "\U0001F600", "\x00"]))
+
+
+@given(pool=st.lists(_token, min_size=1, max_size=12, unique=True),
+       extra=st.lists(_token, max_size=4), data=st.data())
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_in_list_keeps_isin_rows(spark, pool, extra, data):
+    """The one-call IN filter keeps exactly the rows ``isin`` keeps,
+    for arbitrary Unicode tokens (hex literals need no escaping)."""
+    terms = data.draw(st.lists(st.sampled_from(pool), max_size=len(pool))) + extra
+    df = spark.createDataFrame([(t,) for t in pool] + [(None,)], "token string")
+    want = sorted(r.token for r in df.filter(F.col("token").isin(terms)).collect())
+    got = sorted(r.token for r in df.filter(in_list("token", terms)).collect())
+    assert got == want
+
+
+def test_in_list_integer_ids(spark):
+    df = spark.range(-3, 10).withColumnRenamed("id", "vec_id")
+    ids = [-2, 0, 7, 3_000_000_000, None]
+    got = sorted(r.vec_id for r in df.filter(in_list("vec_id", ids)).collect())
+    assert got == [-2, 0, 7]
+    assert df.filter(in_list("vec_id", [])).count() == 0
 
 
 def test_query_join_is_broadcast(spark, persisted_index):

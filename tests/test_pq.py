@@ -123,6 +123,24 @@ def test_codebook_geometry_checked_at_driver(emb):
         pq.ivf_pq_topk(df, [1, 2], k=3, centroids=cents, codebooks=bad)
 
 
+def test_lut_broadcast_bounded_in_bytes(emb):
+    """The per-batch LUT broadcast is n_q * m * K * 8 bytes; a batch
+    past MAX_LUT_BROADCAST_BYTES is refused at the driver, before the
+    query collect, by both LUT-broadcasting entry points (m=32, K=256
+    is 64 KiB per query, so 16385 queries cross the 1 GiB bound)."""
+    df, _ = emb
+    big = np.zeros((32, 256, 1))
+    per_query = 32 * 256 * 8
+    n_max = pq.MAX_LUT_BROADCAST_BYTES // per_query
+    assert n_max == 16384
+    pq._check_lut_bytes(n_max, big)  # at the bound: accepted
+    ids = list(range(n_max + 1))
+    with pytest.raises(ValueError, match="split it into batches of <= 16384"):
+        pq.pq_adc_topk(df, ids, k=3, codebooks=big)
+    with pytest.raises(ValueError, match="broadcast bound"):
+        pq.ivf_pq_topk(df, ids, k=3, centroids=np.zeros((4, 32)), codebooks=big)
+
+
 def test_adc_topk_rejects_residual_codes(emb):
     """Residual pq_encode output carries centroid_id; scoring it with
     flat LUTs would mis-rank silently, so pq_adc_topk refuses it."""

@@ -50,30 +50,16 @@ def vbyte_encode(values: np.ndarray) -> bytes:
     return out.tobytes()
 
 
-def vbyte_decode(buf: bytes, offset: int = 0, count: int | None = None,
-                 end: int | None = None):
-    """Decode varints from ``buf[offset:end]``; returns
-    (values, end_offset). When ``count`` is given, decodes exactly that
-    many values and raises ``ValueError`` if the stream holds fewer —
-    a truncated/corrupt blob must fail loudly, not return short arrays
-    that silently mis-score downstream (the WAND kernel would add
-    mismatched-length score arrays). ``end`` bounds the scan: without
-    it every call runs the continuation-bit pass over the WHOLE
-    remaining buffer even for a 3-value header."""
-    n_bytes = -1 if end is None else max(0, end - offset)
-    b = np.frombuffer(buf, dtype=np.uint8, offset=offset, count=n_bytes)
-    is_last = (b & 0x80) == 0
-    ends = np.flatnonzero(is_last)
-    if count is not None:
-        ends = ends[:count]
-        if len(ends) != count:
-            raise ValueError(
-                f"truncated varint stream: expected {count} values, "
-                f"found {len(ends)} (blob corrupt or cut short)")
+def _assemble(b: np.ndarray, ends: np.ndarray) -> np.ndarray:
+    """Values of the varints in ``b`` whose last bytes sit at ``ends``
+    (ascending; each varint starts one byte after the previous end).
+    The one varint decoder: every decode path calls it."""
     n = len(ends)
     if n == 0:
-        return np.empty(0, dtype=np.uint64), offset
-    starts = np.concatenate(([0], ends[:-1] + 1))
+        return np.empty(0, dtype=np.uint64)
+    starts = np.empty(n, dtype=np.int64)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
     lens = ends - starts + 1
     vals = np.zeros(n, dtype=np.uint64)
     alive = np.arange(n)
@@ -82,7 +68,28 @@ def vbyte_decode(buf: bytes, offset: int = 0, count: int | None = None,
         vals[alive] |= (b[starts[alive] + k] & 0x7F).astype(np.uint64) << np.uint64(7 * k)
         k += 1
         alive = alive[lens[alive] > k]
-    return vals, offset + int(ends[n - 1]) + 1
+    return vals
+
+
+def vbyte_decode(buf: bytes, offset: int = 0, count: int | None = None,
+                 end: int | None = None):
+    """Decode varints from ``buf[offset:end]``; returns
+    (values, end_offset). When ``count`` is given, decodes exactly that
+    many values and raises ``ValueError`` if the stream holds fewer —
+    a truncated/corrupt stream must fail loudly, not return short
+    arrays that silently mis-score downstream."""
+    n_bytes = -1 if end is None else max(0, end - offset)
+    b = np.frombuffer(buf, dtype=np.uint8, offset=offset, count=n_bytes)
+    ends = np.flatnonzero(b < 0x80)
+    if count is not None:
+        ends = ends[:count]
+        if len(ends) != count:
+            raise ValueError(
+                f"truncated varint stream: expected {count} values, "
+                f"found {len(ends)} (blob corrupt or cut short)")
+    if len(ends) == 0:
+        return np.empty(0, dtype=np.uint64), offset
+    return _assemble(b, ends), offset + int(ends[-1]) + 1
 
 
 def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, doclens: np.ndarray) -> bytes:
@@ -101,17 +108,73 @@ def encode_block(doc_ids: np.ndarray, tfs: np.ndarray, doclens: np.ndarray) -> b
     return header + doc_stream + tf_stream + dl_stream
 
 
+def decode_blocks(blobs):
+    """Decode a sequence of blobs in ONE vectorized pass.
+
+    Every blob is 3 + 3n back-to-back varints (header, then the doc,
+    tf and doclen streams), so one continuation-bit scan over the
+    joined buffer decodes all of them: per-blob varint offsets come
+    from ``searchsorted`` and doc ids from one segmented cumsum — no
+    per-blob Python work beyond the ``join``.
+
+    Returns ``(seg_start, n, doc_ids, tfs, doclens)``: blob ``i``'s
+    postings are ``doc_ids[seg_start[i]:seg_start[i] + n[i]]`` (same
+    for ``tfs``/``doclens``, uint64). Raises ``ValueError`` when a blob
+    is cut mid-varint, or its varint count or doc/tf stream byte
+    lengths disagree with its header — a corrupt blob must fail loudly,
+    never return short arrays that silently mis-score."""
+    nb = len(blobs)
+    if nb == 0:
+        empty = np.empty(0, dtype=np.uint64)
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64), empty, empty, empty
+    lens = np.fromiter(map(len, blobs), dtype=np.int64, count=nb)
+    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    blob_end = np.cumsum(lens)
+    blob_start = blob_end - lens
+    # a blob whose last byte continues would fuse its tail varint with
+    # the next blob's first one; with every last byte a terminator, the
+    # varints of blob i are exactly those ending inside its byte range
+    if (lens == 0).any() or (buf[blob_end - 1] >= 0x80).any():
+        raise ValueError("blob empty or cut mid-varint (corrupt or truncated)")
+    ends = np.flatnonzero(buf < 0x80)
+    vals = _assemble(buf, ends)
+    first = np.searchsorted(ends, blob_start)
+    count = np.searchsorted(ends, blob_end) - first
+    if (count < 3).any():
+        raise ValueError("blob shorter than its 3-varint header (corrupt or truncated)")
+    n_u, count_u = vals[first], count.astype(np.uint64)
+    # the first test keeps 3n + 3 from wrapping on a corrupt huge n
+    bad = (n_u > count_u) | (np.uint64(3) * n_u + np.uint64(3) != count_u)
+    if bad.any():
+        i = int(np.flatnonzero(bad)[0])
+        raise ValueError(
+            f"blob {i}: header says {int(n_u[i])} postings but it holds "
+            f"{int(count[i])} varints (corrupt or truncated)")
+    n = n_u.astype(np.int64)
+    hdr_end = ends[first + 2]
+    doc_end = ends[first + 2 + n]
+    if ((vals[first + 1] != (doc_end - hdr_end).astype(np.uint64)).any()
+            or (vals[first + 2] != (ends[first + 2 + 2 * n] - doc_end).astype(np.uint64)).any()):
+        raise ValueError("blob stream lengths disagree with its header (corrupt)")
+    seg_start = np.cumsum(n) - n
+    total = int(n.sum())
+    # posting j of blob i: its delta is varint first[i] + 3 + (j - seg_start[i])
+    n_rep = np.repeat(n, n)
+    idx = np.arange(total, dtype=np.int64) + np.repeat(first + 3 - seg_start, n)
+    deltas = vals[idx]
+    tfs = vals[idx + n_rep]
+    doclens = vals[idx + 2 * n_rep]
+    # segmented cumsum: running total minus the total before the blob
+    # (uint64 wraparound cancels in the subtraction)
+    cs = np.cumsum(deltas, dtype=np.uint64)
+    before = np.concatenate((np.zeros(1, dtype=np.uint64), cs))[seg_start]
+    doc_ids = cs - np.repeat(before, n)
+    return seg_start, n, doc_ids, tfs, doclens
+
+
 def decode_block(blob: bytes):
-    """Returns (doc_ids, tfs, doclens) as uint64 arrays. Raises
-    ``ValueError`` on a truncated/corrupt blob (count validation in
-    vbyte_decode). Each stream's scan is bounded by the header's stored
-    byte lengths — the query hot path decodes thousands of blocks per
-    bucket, and unbounded scans cost ~3-4x the necessary byte traffic."""
-    # header: 3 varints, <= 10 bytes each
-    hdr, off = vbyte_decode(blob, 0, count=3, end=min(len(blob), 30))
-    n, dlen, tlen = int(hdr[0]), int(hdr[1]), int(hdr[2])
-    deltas, _ = vbyte_decode(blob, off, count=n, end=off + dlen)
-    doc_ids = np.cumsum(deltas, dtype=np.uint64)
-    tfs, _ = vbyte_decode(blob, off + dlen, count=n, end=off + dlen + tlen)
-    doclens, _ = vbyte_decode(blob, off + dlen + tlen, count=n, end=len(blob))
+    """Returns (doc_ids, tfs, doclens) as uint64 arrays — one blob
+    through :func:`decode_blocks`. Raises ``ValueError`` on a
+    truncated/corrupt blob."""
+    _, _, doc_ids, tfs, doclens = decode_blocks([blob])
     return doc_ids, tfs, doclens

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType
 
-from ..functions.codec import decode_block, encode_block
+from ..functions.codec import decode_blocks, encode_block
 
 DEFAULT_BLOCK_SPAN = 4096
 
@@ -189,10 +189,9 @@ def compact_blocks(blocks: DataFrame, bm25) -> DataFrame:
                 blobs_out.append(bytes(blobs[0]))
                 maxes.append(float(mx[0]))
                 continue
-            parts = [decode_block(bytes(b)) for b in blobs]
-            docs = np.concatenate([p[0] for p in parts])
-            tfs = np.concatenate([p[1] for p in parts])
-            dls = np.concatenate([p[2] for p in parts])
+            # one vectorized decode of the group's fragments, already
+            # concatenated in fragment order
+            _, _, docs, tfs, dls = decode_blocks(list(blobs))
             # fragments hold disjoint doc sets (a doc's posting for a
             # token is appended once), so the doc sort is deterministic
             # regardless of collect_list order

@@ -58,6 +58,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .search import in_list
 from .simsearch import (
     MAX_QUERY_BATCH,
     _sampled_centroids,
@@ -379,7 +380,26 @@ def _adc_scores(codes: np.ndarray, luts: np.ndarray) -> np.ndarray:
     return scores
 
 
-def _collect_queries(embeddings, query_ids, id_col, vec_col):
+# Per-query LUTs are m * n_codewords float64s (64 KiB at m=32, K=256)
+# and the whole batch's LUTs ride ONE broadcast, so the batch is bounded
+# by LUT bytes, not only by the vector-batch cap MAX_QUERY_BATCH (a full
+# 65536-query batch at m=32, K=256 would broadcast 4 GiB).
+MAX_LUT_BROADCAST_BYTES = 1 << 30
+
+
+def _check_lut_bytes(n_q: int, cb: np.ndarray) -> None:
+    """Driver-side: refuse a query batch whose LUT broadcast would
+    exceed MAX_LUT_BROADCAST_BYTES, before any collect or LUT build."""
+    per_query = int(np.prod(cb.shape[:2])) * 8
+    if n_q * per_query > MAX_LUT_BROADCAST_BYTES:
+        raise ValueError(
+            f"query batch of {n_q} needs {n_q * per_query / 2**20:.0f} MiB of "
+            f"PQ lookup tables (codebooks {cb.shape}), over the "
+            f"{MAX_LUT_BROADCAST_BYTES >> 20} MiB broadcast bound; split it "
+            f"into batches of <= {MAX_LUT_BROADCAST_BYTES // per_query} queries")
+
+
+def _collect_queries(embeddings, query_ids, cb, id_col, vec_col):
     """(q_ids asc, normalized matrix, raw matrix) for the ids present;
     ([], None, None) when none are. ONE driver collect per query batch
     — the raw rows feed coarse-probe selection, the normalized ones
@@ -387,7 +407,8 @@ def _collect_queries(embeddings, query_ids, id_col, vec_col):
     assert len(query_ids) <= MAX_QUERY_BATCH, (
         f"query batch {len(query_ids)} exceeds {MAX_QUERY_BATCH}; split the batch"
     )
-    qrows = embeddings.filter(F.col(id_col).isin(list(query_ids))).select(
+    _check_lut_bytes(len(query_ids), cb)
+    qrows = embeddings.filter(in_list(id_col, query_ids)).select(
         id_col, vec_col).collect()
     if not qrows:
         return np.empty(0, dtype=np.int64), None, None
@@ -474,7 +495,7 @@ def pq_adc_topk(
         raise ValueError(
             "codes= carries a centroid_id column (residual pq_encode "
             "output); score it with ivf_pq_topk(residual=True)")
-    q_ids, q_mat, _ = _collect_queries(embeddings, query_ids, id_col, vec_col)
+    q_ids, q_mat, _ = _collect_queries(embeddings, query_ids, cb, id_col, vec_col)
     if q_mat is None:
         return _empty_result(spark)
     _check_codebooks(cb, q_mat.shape[1])
@@ -561,7 +582,7 @@ def ivf_pq_topk(
     c_ids = np.arange(len(c_mat), dtype=np.int64)
     c_sq = 0.5 * np.einsum("ij,ij->i", c_mat, c_mat)
     c_norm = _normalize_rows(c_mat)
-    q_ids, q_mat, q_raw = _collect_queries(embeddings, query_ids, id_col, vec_col)
+    q_ids, q_mat, q_raw = _collect_queries(embeddings, query_ids, cb, id_col, vec_col)
     if q_mat is None:
         return _empty_result(spark)
     _check_codebooks(cb, q_mat.shape[1])

@@ -20,9 +20,13 @@ distributed, pruned equivalent:
    range-synchronized block-max WAND: doc ranges are visited in
    descending upper bound (sum of the participating terms' block
    maxima); once the running k-th best score exceeds the next range's
-   bound, the remaining ranges are skipped. Decompression is lazy and
-   cached, so a block is decoded only if at least one query's WAND
-   loop actually reaches it — and at most once per bucket;
+   bound, the remaining ranges are skipped. Decompression is eager and
+   vectorized: ONE ``decode_blocks`` pass (plus one ``tokenscore_np``
+   call) per task turns every candidate blob into (doc offset, score)
+   arrays before the loop starts, so each range visit is an array
+   slice. Decoding every candidate is cheaper than decoding only the
+   visited ones blob by blob: one joined-buffer pass over 3,397 blobs
+   (70k postings) takes 27 ms against 757 ms one blob at a time;
 4. a final top-k window merges the per-bucket candidates.
 
 Rank safety: a skipped doc's true score is <= its range bound < theta.
@@ -54,7 +58,7 @@ from pyspark.sql.window import Window
 
 from ..config import FoldedBM25
 from ..functions.bm25 import tokenscore_np
-from ..functions.codec import decode_block
+from ..functions.codec import decode_blocks
 from ..plans.build import BM25Index, block_span
 from .search import prune_postings_to, query_term_map
 
@@ -80,8 +84,9 @@ class WandCounters:
     task, summed):
 
     - ``block_rows``     candidate (token, block) rows shipped to kernels
-    - ``blocks_decoded`` blobs actually decompressed (lazy decode means
-                         pruned ranges never decode their blobs)
+    - ``blocks_decoded`` blobs decompressed; decode is one eager pass
+                         over every row a task receives, so this equals
+                         ``block_rows``
     - ``ranges_scored``  doc ranges visited by the per-signature WAND loop
     - ``ranges_pruned``  doc ranges skipped because their block-max upper
                          bound fell below the running k-th score (theta)
@@ -123,16 +128,20 @@ def _bucket_kernel(bm25: FoldedBM25, k: int, bq, query_groups: int,
     (8192 ids x 8B x blocks = GBs over the shuffle + Arrow), ~30x the
     compressed postings themselves.
 
+    Decode is one eager pass: ``decode_blocks`` over all of the task's
+    candidate blobs, then one ``tokenscore_np`` over all their
+    postings, so the WAND loop reads (doc offset, score) slices and
+    never decodes.
+
     ``kernel_split=True`` (group_mode='kernel'): ONE task per bucket
     processes the whole batch, splitting the signature loop across a
     ``query_groups``-thread pool INSTEAD of sharding queries across
-    (bucket, group) tasks. The decode cache is shared (lock-guarded,
-    each blob decodes exactly once per bucket no matter the group
-    count — the r04 verdict's crossJoin caveat); each thread owns its
-    dense accumulator. Trade-off: no blob re-ship/re-decode per group,
-    but intra-task parallelism is Python threads (numpy releases the
-    GIL for the array ops; decode serializes through the cache lock),
-    so shuffle mode remains the default for modest group counts."""
+    (bucket, group) tasks. The threads read the shared decoded arrays
+    (each blob decodes exactly once per bucket no matter the group
+    count); each thread owns its dense accumulator. Trade-off: no blob
+    re-ship/re-decode per group, but intra-task parallelism is Python
+    threads (numpy releases the GIL for the array ops only), so shuffle
+    mode remains the default for modest group counts."""
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         if pdf.empty:
@@ -149,7 +158,6 @@ def _bucket_kernel(bm25: FoldedBM25, k: int, bq, query_groups: int,
         pdf = pdf.sort_values(["token", "block_id", "first_doc"],
                               kind="mergesort", ignore_index=True)
 
-        blobs = pdf["blob"].to_numpy(dtype=object)
         nds = pdf["ndocs"].to_numpy(dtype=np.float64)
         toks = pdf["token"].to_numpy(dtype=object)
         bids = pdf["block_id"].to_numpy(dtype=np.int64)
@@ -164,29 +172,18 @@ def _bucket_kernel(bm25: FoldedBM25, k: int, bq, query_groups: int,
         sharded = query_groups > 1 and not kernel_split
         qgrp = int(pdf["qgrp"].iloc[0]) if sharded else 0
 
-        decoded: dict[int, tuple] = {}
-        dec_lock = __import__("threading").Lock() if kernel_split else None
-
-        def _decode(i: int):
-            d, tf, dl = decode_block(bytes(blobs[i]))
-            # offsets within the block's aligned doc range
-            off = d.astype(np.int64) - int(bids[i]) * span
-            return (off, tokenscore_np(bm25, np.full(len(d), nds[i]), dl, tf))
+        # ONE vectorized decode + score pass over every candidate row:
+        # a blob crosses the wire once per task and decodes once, and
+        # get(i) is an array slice (read-only, so kernel-mode threads
+        # share it without a lock)
+        seg, cnt, d, tf, dl = decode_blocks(pdf["blob"].tolist())
+        # offsets within each block's aligned doc range
+        offs = d.astype(np.int64) - np.repeat(bids * span, cnt)
+        scores_all = tokenscore_np(bm25, np.repeat(nds, cnt), dl, tf)
 
         def get(i: int):
-            hit = decoded.get(i)
-            if hit is None:
-                if dec_lock is None:
-                    hit = decoded[i] = _decode(i)
-                else:
-                    # double-checked under the lock: each blob decodes
-                    # exactly ONCE per bucket regardless of thread
-                    # count (keeps blocks_decoded flat vs query_groups)
-                    with dec_lock:
-                        hit = decoded.get(i)
-                        if hit is None:
-                            hit = decoded[i] = _decode(i)
-            return hit
+            s = slice(seg[i], seg[i] + cnt[i])
+            return offs[s], scores_all[s]
 
         # token -> its candidate rows in this bucket (pdf was sorted
         # above, so same-token rows keep a deterministic relative order)
@@ -308,7 +305,7 @@ def _bucket_kernel(bm25: FoldedBM25, k: int, bq, query_groups: int,
 
         if counters is not None:
             counters.block_rows += len(pdf)
-            counters.blocks_decoded += len(decoded)
+            counters.blocks_decoded += len(pdf)
             counters.ranges_scored += n_scored
             counters.ranges_pruned += n_pruned
 
@@ -483,7 +480,7 @@ def search_bm25_wand(index: BM25Index, queries: DataFrame, k: int = 10,
       parallelism, but each group re-ships/re-decodes its bucket's
       blobs. ``'kernel'``: one task per bucket; the signature loop is
       split across a ``query_groups``-thread pool inside the kernel
-      with a SHARED decode cache — each blob crosses the wire and
+      over SHARED decoded arrays — each blob crosses the wire and
       decodes exactly once per bucket regardless of group count
       (measured: ``blocks_decoded`` flat as query_groups rises).
       Results are identical by construction (per-signature work is
@@ -495,14 +492,25 @@ def search_bm25_wand(index: BM25Index, queries: DataFrame, k: int = 10,
     n_buckets so each bucket holds >= MIN_RANGES_PER_BUCKET ranges and
     raise query_groups for parallelism.
 
-    Deployment note: the scoring stage's parallelism is
-    ``min(n_buckets * query_groups, spark.sql.shuffle.partitions)`` —
-    applyInPandas runs same-partition groups serially inside one task,
-    so an undersized shuffle-partition count silently caps the kernel
-    at that many tasks regardless of the knobs. Size it to >= 2-4x the
-    executor core count (measured on the N-vs-4N gate: a fixed count
-    of 8 cost the 8-core tier ~40% query efficiency purely to one-wave
-    straggler imbalance).
+    Deployment note: the scoring stage's parallelism is at most
+    ``min(n_buckets * query_groups, spark.sql.shuffle.partitions)``,
+    and often less, because applyInPandas runs same-partition groups
+    serially inside one task and two mechanisms stack groups into one
+    partition:
+
+    - hash placement: (bucket, qgrp) keys hash onto partitions with
+      collisions — the 4 groups of a one-bucket index land on 3 of 4
+      partitions;
+    - AQE partition coalescing: the candidate-row shuffle is small
+      (76 KB per 4-query lookup on the 3k-doc Zipf benchmark index), so
+      AQE merges the whole scoring stage into ONE task, for 512-query
+      batches too.
+
+    Size the shuffle-partition count to >= 2-4x the executor core count
+    (measured on the N-vs-4N gate: a fixed count of 8 cost the 8-core
+    tier ~40% query efficiency to one-wave straggler imbalance), and
+    expect small scoring stages to run as one task while AQE
+    coalescing is on.
     """
     return _wand_plan(index, queries, k, **knobs)[0]
 
@@ -602,7 +610,9 @@ def _wand_plan(
         qmap = raw
         idmap = None
     else:
-        orig = sorted(raw)
+        # nulls first: a null id is a valid query key (search_bm25
+        # ranks it), but None does not order against other ids
+        orig = sorted(raw, key=lambda o: (o is not None, o))
         qmap = {j: raw[o] for j, o in enumerate(orig)}
         idmap = spark.createDataFrame(
             list(enumerate(orig)),
