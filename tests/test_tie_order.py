@@ -22,6 +22,8 @@ from textsearch_spark.operators.search import search_bm25
 from textsearch_spark.operators.wand import search_bm25_wand
 from textsearch_spark.plans.build import build_bm25_index
 
+from .conftest import WAND_PLANS, wand_plan
+
 N_DOCS = 64
 K = 10
 
@@ -37,6 +39,9 @@ def tied_index(spark):
     # span 8 => 9 blocks: ties must survive the cross-bucket merge and
     # the final window, not just a single in-kernel top-k
     idx.blocks = build_posting_blocks(idx.postings, span=8).cache()
+    # materialized, the cache reports its in-memory size to Catalyst —
+    # the estimate that lets WAND take its driver plan here
+    idx.blocks.count()
     return idx
 
 
@@ -66,15 +71,19 @@ def test_wand_all_ties_doc_asc(spark, tied_index, n_buckets, query_groups,
                                group_mode):
     qdf = spark.createDataFrame(
         [(1, "alpha gamma"), (2, "beta")], "query_id long, qtext string")
-    rows = search_bm25_wand(tied_index, qdf, k=K, n_buckets=n_buckets,
-                            query_groups=query_groups,
-                            group_mode=group_mode).collect()
-    by_q = {}
-    for r in rows:
-        by_q.setdefault(r.query_id, []).append(r)
-    assert set(by_q) == {1, 2}
-    for q, qrows in by_q.items():
-        assert _got(qrows) == _expected(), (q, n_buckets, query_groups)
+    # the driver plan scores every block as one bucket and ignores the
+    # scoring-stage knobs; the distributed plan honours them
+    for plan in WAND_PLANS:
+        with wand_plan(spark, plan):
+            rows = search_bm25_wand(tied_index, qdf, k=K, n_buckets=n_buckets,
+                                    query_groups=query_groups,
+                                    group_mode=group_mode).collect()
+        by_q = {}
+        for r in rows:
+            by_q.setdefault(r.query_id, []).append(r)
+        assert set(by_q) == {1, 2}, plan
+        for q, qrows in by_q.items():
+            assert _got(qrows) == _expected(), (plan, q, n_buckets, query_groups)
 
 
 def test_cosine_all_ties_doc_asc(spark):

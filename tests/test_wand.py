@@ -10,6 +10,8 @@ from textsearch_spark.operators.search import search_bm25
 from textsearch_spark.operators.wand import search_bm25_wand
 from textsearch_spark.plans.build import build_bm25_index
 
+from .conftest import WAND_PLANS, recorded_wand_plans, wand_plan
+
 
 def _assert_rank_identical(naive_rows, wand_rows, tol=1e-9):
     """Same (query, rank)->doc mapping; tied scores may permute, so
@@ -40,11 +42,18 @@ def golden_index(golden_corpus_df):
 
 
 def test_wand_matches_golden(golden_index, spark):
+    """The reference golden (test/search.jl:27-70) on both plans."""
+    from .test_bm25_golden import GOLDEN_IDS, GOLDEN_NEG_SCORES
+
     qs = spark.createDataFrame(
         [(1, "la casa de la manzana verde")], "query_id long, qtext string"
     )
-    res = search_bm25_wand(golden_index, qs, k=3, n_buckets=2).orderBy("rank").collect()
-    assert [r.doc_id for r in res] == [6, 2, 4]
+    for plan in WAND_PLANS:
+        with wand_plan(spark, plan):
+            res = search_bm25_wand(golden_index, qs, k=3, n_buckets=2).orderBy("rank").collect()
+        assert [r.doc_id for r in res] == GOLDEN_IDS, plan
+        sql2 = sum(((-r.score) - g) ** 2 for r, g in zip(res, GOLDEN_NEG_SCORES))
+        assert sql2 <= 1e-4, plan
 
 
 @pytest.mark.parametrize("id_type, ids", [
@@ -59,9 +68,11 @@ def test_wand_null_query_id_differential(golden_index, spark, id_type, ids):
     qdf = spark.createDataFrame(list(zip(ids, texts)),
                                 f"query_id {id_type}, qtext string")
     naive = search_bm25(golden_index, qdf, k=3).collect()
-    wand = search_bm25_wand(golden_index, qdf, k=3, n_buckets=2).collect()
-    _assert_rank_identical(naive, wand)
-    assert any(r.query_id is None for r in wand)
+    for plan in WAND_PLANS:
+        with wand_plan(spark, plan):
+            wand = search_bm25_wand(golden_index, qdf, k=3, n_buckets=2).collect()
+        _assert_rank_identical(naive, wand)
+        assert any(r.query_id is None for r in wand), plan
 
 
 def test_wand_differential_sf0001(spark):
@@ -144,20 +155,23 @@ def _zipf_queries(spark, corpus, n, seed=7, id0=0):
 
 def test_wand_prunes_on_zipf_corpus(spark, zipf_index):
     """BMW must actually skip doc ranges on a realistic vocabulary, and
-    the skipping must not change any result (VERDICT r02 item 1)."""
+    the skipping must not change any result (VERDICT r02 item 1) — on
+    both plans; the driver plan adds to the counters on the driver."""
     from textsearch_spark.operators.wand import WandCounters
 
     corpus, idx = zipf_index
     qdf = _zipf_queries(spark, corpus, 64)
-    ctr = WandCounters(spark)
-    wand = search_bm25_wand(idx, qdf, k=10, counters=ctr).collect()
     naive = search_bm25(idx, qdf, k=10).collect()
-    _assert_rank_identical(naive, wand)
-    stats = ctr.as_dict()
-    assert stats["ranges_pruned"] > 0, stats
-    # eager one-pass decode: every candidate row a task receives is
-    # decoded exactly once, pruned ranges included
-    assert stats["blocks_decoded"] == stats["block_rows"], stats
+    for plan in WAND_PLANS:
+        ctr = WandCounters(spark)
+        with wand_plan(spark, plan):
+            wand = search_bm25_wand(idx, qdf, k=10, counters=ctr).collect()
+        _assert_rank_identical(naive, wand)
+        stats = ctr.as_dict()
+        assert stats["ranges_pruned"] > 0, (plan, stats)
+        # eager one-pass decode: every candidate row a kernel receives
+        # is decoded exactly once, pruned ranges included
+        assert stats["blocks_decoded"] == stats["block_rows"] > 0, (plan, stats)
 
 
 def _jobs_run_by(spark, fn) -> int:
@@ -174,11 +188,12 @@ def _jobs_run_by(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_wand_lookup_job_budget(spark, zipf_index):
-    """A 4-query lookup on a cached, non-resident index costs at most
-    the queries collect, the term broadcast, the two scoring stages and
-    the result — no tokenize job, no span probe, no group broadcast.
-    The span is probed at most once per index handle."""
+def test_wand_lookup_job_budget(spark, zipf_index, distributed_plan):
+    """A distributed-plan 4-query lookup on a cached, non-resident
+    index costs at most the queries collect, the term broadcast, the
+    two scoring stages and the result — no tokenize job, no span probe,
+    no group broadcast. The span is probed at most once per index
+    handle."""
     import dataclasses
 
     from textsearch_spark.operators.wand import _default_n_buckets, _default_query_groups
@@ -206,10 +221,12 @@ def test_wand_chunked_differential(spark, zipf_index):
 
     corpus, idx = zipf_index
     qdf = _zipf_queries(spark, corpus, 50, seed=11)
-    whole = search_bm25_wand(idx, qdf, k=5).collect()
-    chunked = search_bm25_wand_chunked(idx, qdf, k=5, chunk_size=12).collect()
-    _assert_rank_identical(whole, chunked)
-    assert len(chunked) == len(whole) > 0
+    for plan in WAND_PLANS:
+        with wand_plan(spark, plan):
+            whole = search_bm25_wand(idx, qdf, k=5).collect()
+            chunked = search_bm25_wand_chunked(idx, qdf, k=5, chunk_size=12).collect()
+        _assert_rank_identical(whole, chunked)
+        assert len(chunked) == len(whole) > 0, plan
 
 
 def test_wand_chunked_incremental_write(spark, zipf_index, tmp_path):
@@ -221,31 +238,36 @@ def test_wand_chunked_incremental_write(spark, zipf_index, tmp_path):
 
     corpus, idx = zipf_index
     qdf = _zipf_queries(spark, corpus, 50, seed=13)
-    whole = search_bm25_wand(idx, qdf, k=5).collect()
+    wholes = []
+    for plan in WAND_PLANS:
+        with wand_plan(spark, plan):
+            whole = search_bm25_wand(idx, qdf, k=5).collect()
+            wholes.append(whole)
 
-    out_few = str(tmp_path / "few")
-    res_few = search_bm25_wand_chunked(idx, qdf, k=5, chunk_size=30,
-                                       output_path=out_few)
-    _assert_rank_identical(whole, res_few.collect())
+            out_few = str(tmp_path / plan / "few")
+            res_few = search_bm25_wand_chunked(idx, qdf, k=5, chunk_size=30,
+                                               output_path=out_few)
+            _assert_rank_identical(whole, res_few.collect())
 
-    out_many = str(tmp_path / "many")
-    res_many = search_bm25_wand_chunked(idx, qdf, k=5, chunk_size=7,
-                                        output_path=out_many)
-    _assert_rank_identical(whole, res_many.collect())
+            out_many = str(tmp_path / plan / "many")
+            res_many = search_bm25_wand_chunked(idx, qdf, k=5, chunk_size=7,
+                                                output_path=out_many)
+            _assert_rank_identical(whole, res_many.collect())
 
-    plan_few = res_few._jdf.queryExecution().optimizedPlan().toString()
-    plan_many = res_many._jdf.queryExecution().optimizedPlan().toString()
-    assert plan_few.count("\n") == plan_many.count("\n"), (
-        "incremental-write plan size must be flat in chunk count")
-    assert "Union" not in plan_many
+            plan_few = res_few._jdf.queryExecution().optimizedPlan().toString()
+            plan_many = res_many._jdf.queryExecution().optimizedPlan().toString()
+            assert plan_few.count("\n") == plan_many.count("\n"), (
+                "incremental-write plan size must be flat in chunk count")
+            assert "Union" not in plan_many
 
-    # the call OWNS output_path: a rerun into the same path (retry after
-    # a mid-loop failure, or over a stale previous result) must replace
-    # it, not append duplicate (query_id, rank) rows
-    res_rerun = search_bm25_wand_chunked(idx, qdf, k=5, chunk_size=7,
-                                         output_path=out_many)
-    _assert_rank_identical(whole, res_rerun.collect())
-    assert res_rerun.count() == len(whole)
+            # the call OWNS output_path: a rerun into the same path (retry
+            # after a mid-loop failure, or over a stale previous result)
+            # must replace it, not append duplicate (query_id, rank) rows
+            res_rerun = search_bm25_wand_chunked(idx, qdf, k=5, chunk_size=7,
+                                                 output_path=out_many)
+            _assert_rank_identical(whole, res_rerun.collect())
+            assert res_rerun.count() == len(whole)
+    _assert_rank_identical(*wholes)
 
 
 def test_wand_accept_veto_differential(spark, zipf_index):
@@ -255,8 +277,10 @@ def test_wand_accept_veto_differential(spark, zipf_index):
     qdf = _zipf_queries(spark, corpus, 40, seed=3)
     # veto stop-wordish lists: drops the Zipf head terms from scoring
     naive = search_bm25(idx, qdf, k=10, accept_max_ndocs=400).collect()
-    wand = search_bm25_wand(idx, qdf, k=10, accept_max_ndocs=400).collect()
-    _assert_rank_identical(naive, wand)
+    for plan in WAND_PLANS:
+        with wand_plan(spark, plan):
+            wand = search_bm25_wand(idx, qdf, k=10, accept_max_ndocs=400).collect()
+        _assert_rank_identical(naive, wand)
     # and the veto actually changes results vs the unvetoed run
     full = search_bm25(idx, qdf, k=10).collect()
     assert sorted((r.query_id, r.rank, r.doc_id) for r in full) != sorted(
@@ -281,12 +305,14 @@ def test_wand_typo_differential(spark):
     qdf = spark.createDataFrame(qs, "query_id long, qtext string")
 
     naive = search_bm25(idx, qdf, k=10, typo_tolerant=True).collect()
-    wand = search_bm25_wand(idx, qdf, k=10, typo_tolerant=True, n_buckets=3).collect()
-    _assert_rank_identical(naive, wand)
+    for plan in WAND_PLANS:
+        with wand_plan(spark, plan):
+            wand = search_bm25_wand(idx, qdf, k=10, typo_tolerant=True, n_buckets=3).collect()
+        _assert_rank_identical(naive, wand)
     assert naive  # the misspelled terms still resolve and score
 
 
-def test_wand_kernel_group_mode_differential(spark, zipf_index):
+def test_wand_kernel_group_mode_differential(spark, zipf_index, distributed_plan):
     """group_mode='kernel' (r04 verdict item 7): identical results to
     shuffle mode, and blocks_decoded stays FLAT as query_groups rises
     (the threads share one decode pass — shuffle mode re-decodes per
@@ -319,7 +345,7 @@ def test_wand_kernel_group_mode_differential(spark, zipf_index):
     assert ctr8.blocks_decoded.value > ctr1.blocks_decoded.value
 
 
-def test_wand_adaptive_defaults(spark, zipf_index):
+def test_wand_adaptive_defaults(spark, zipf_index, distributed_plan):
     """Knob-free call (r04 verdict item 8): n_buckets and query_groups
     both default adaptively and the result matches explicit knobs."""
     from textsearch_spark.operators.wand import (
@@ -338,7 +364,7 @@ def test_wand_adaptive_defaults(spark, zipf_index):
     assert qg == max(1, min(MAX_DEFAULT_QUERY_GROUPS, shuffle // nb))
 
 
-def test_wand_prebucket_resident(spark, zipf_index):
+def test_wand_prebucket_resident(spark, zipf_index, distributed_plan):
     """prebucket_blocks (r04 verdict item 3 follow-through): queries
     over a partition-resident blocks table are rank-identical, the
     scoring groupBy adds NO exchange (postings stop re-shipping per
@@ -388,7 +414,7 @@ def test_wand_prebucket_resident(spark, zipf_index):
     idx.blocks.unpersist(blocking=False)
 
 
-def test_wand_replicated_resident(spark, zipf_index):
+def test_wand_replicated_resident(spark, zipf_index, distributed_plan):
     """prebucket_blocks(replicas=G): the few-bucket high-QPS serving
     shape. Query shard g scores against replica g of every bucket —
     rank-identical to the shuffled scorer (each query hits exactly one
@@ -435,4 +461,86 @@ def test_wand_replicated_resident(spark, zipf_index):
     # a forced group count != G likewise falls back (correct, shuffled)
     grp = search_bm25_wand(idx, qdf, k=10, query_groups=5)
     _assert_rank_identical(base, grp.collect())
+    idx.blocks.unpersist(blocking=False)
+
+
+# ------------------------------------------------------------ plan choice
+
+def test_wand_driver_plan_lookup(spark, zipf_index):
+    """Below the broadcast threshold a 4-query lookup is scored on the
+    driver: the queries collect and the candidate collect, no
+    Python-worker stage in the result's plan, and collecting the
+    returned local relation starts no job."""
+    corpus, idx = zipf_index
+    qdf = _zipf_queries(spark, corpus, 4, seed=5)
+    search_bm25_wand(idx, qdf, 10).collect()  # warm codegen
+    out = []
+    with wand_plan(spark, "driver"):
+        n = _jobs_run_by(spark, lambda: out.append(search_bm25_wand(idx, qdf, 10)))
+    assert n <= 2, n
+    res = out[0]
+    assert "FlatMapGroupsInPandas" not in res._jdf.queryExecution().executedPlan().toString()
+    rows = []
+    assert _jobs_run_by(spark, lambda: rows.extend(res.collect())) == 0
+    _assert_rank_identical(search_bm25(idx, qdf, 10).collect(), rows)
+
+
+def test_wand_plan_follows_threshold(spark, zipf_index):
+    """The plan is chosen by Catalyst's size estimate of the blocks
+    table against spark.sql.autoBroadcastJoinThreshold: at the estimate
+    the call runs on the driver, one byte below it the distributed plan
+    runs — and both rank identically."""
+    from textsearch_spark.operators.wand import _size_estimate
+
+    corpus, idx = zipf_index
+    qdf = _zipf_queries(spark, corpus, 4, seed=5)
+    est = _size_estimate(idx.blocks)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(est))
+        with recorded_wand_plans() as at:
+            on_driver = search_bm25_wand(idx, qdf, 10).collect()
+        spark.conf.set(key, str(est - 1))
+        with recorded_wand_plans() as below:
+            res = search_bm25_wand(idx, qdf, 10)
+            distributed = res.collect()
+    finally:
+        spark.conf.set(key, old)
+    assert [r[:3] for r in at] == [("driver", est, est)]
+    assert at[0][3] > 0  # candidate rows
+    assert [r[:3] for r in below] == [("distributed", est, est - 1)]
+    assert "FlatMapGroupsInPandas" in res._jdf.queryExecution().executedPlan().toString()
+    _assert_rank_identical(on_driver, distributed)
+
+
+@pytest.mark.parametrize("plan", WAND_PLANS)
+def test_wand_empty_batches_keep_id_type(spark, zipf_index, plan):
+    """An empty batch and an all-OOV batch return no rows typed with
+    the caller's id type, on both plans."""
+    _, idx = zipf_index
+    empty = spark.createDataFrame([], "query_id string, qtext string")
+    oov = spark.createDataFrame([("q-x", "zzzzq qqqqz")], "query_id string, qtext string")
+    with wand_plan(spark, plan):
+        outs = [search_bm25_wand(idx, empty, 5), search_bm25_wand(idx, oov, 5)]
+    for out in outs:
+        assert out.dtypes == [("query_id", "string"), ("rank", "int"),
+                              ("doc_id", "bigint"), ("score", "double")]
+        assert out.count() == 0
+
+
+def test_wand_driver_plan_on_replicated_blocks(spark, golden_index):
+    """A replica-exploded blocks table small enough for the driver plan
+    is scored from one copy of every block row, not G copies."""
+    import dataclasses
+
+    from textsearch_spark.operators.wand import prebucket_blocks
+
+    qdf = spark.createDataFrame(
+        [(1, "la casa de la manzana verde"), (2, "verde rica")], "query_id long, qtext string")
+    idx = dataclasses.replace(golden_index)
+    prebucket_blocks(idx, n_buckets=2, replicas=3, unpersist_displaced=False)
+    with wand_plan(spark, "driver"):
+        got = search_bm25_wand(idx, qdf, k=3).collect()
+    _assert_rank_identical(search_bm25(idx, qdf, k=3).collect(), got)
     idx.blocks.unpersist(blocking=False)

@@ -156,9 +156,14 @@ def search_bm25(
     qmap = query_term_map(index, queries, query_col=query_col, id_col=id_col,
                           typo_tolerant=typo_tolerant, maxdist=maxdist)
     # FROZEN driver-side rows from the map: the IN-pushdown and the join
-    # see one evaluation of a (possibly non-deterministic) source
+    # see one evaluation of a (possibly non-deterministic) source. Built
+    # from pandas, the relation is Arrow-backed and the JVM reads it
+    # with no Python worker; object dtype keeps null and 64-bit ids exact
     q = index.spark.createDataFrame(
-        [(qid, t) for qid, ts in qmap.items() for t in ts],
+        pd.DataFrame({
+            id_col: pd.Series([qid for qid, ts in qmap.items() for _ in ts], dtype=object),
+            "token": pd.Series([t for ts in qmap.values() for t in ts], dtype=object),
+        }),
         StructType([queries.schema[id_col], StructField("token", StringType())]))
 
     p = index.postings

@@ -2,21 +2,39 @@
 
 Replaces the reference's k-way union merge + KnnResult
 (xmerge! at src/bm25invfilesearch.jl:37-45, onmatch! at :10-24) with a
-distributed, pruned equivalent:
+pruned equivalent. Every call starts the same way:
 
 1. the query batch is tokenized ON THE DRIVER (search.query_term_map)
-   into a broadcast ``{query_id: term tuple}`` the kernel reads; the
-   batch's distinct terms, an Arrow-built relation the JVM reads with
-   no Python worker, are broadcast-joined to the block table — the
-   distributed ``select_posting_lists``. Each candidate row is a distinct
+   into a ``{query_id: term tuple}`` map the kernel reads;
+2. the physical plan is chosen by size: Catalyst's estimate of
+   ``index.blocks`` (plan statistics — no job) against the session's
+   ``spark.sql.autoBroadcastJoinThreshold``, the bound below which
+   Spark's own planner ships a relation to one place instead of
+   shuffling it. An unknown estimate (an uncached derived plan, a
+   catalog table without statistics) reads as huge.
+
+**Driver plan** (estimate <= threshold): the blocks of the batch's
+terms come to the driver in ONE Arrow ``toPandas()``, the kernel of
+step 5 scores them all as one bucket, and the ranking and any
+surrogate-id mapping happen in pandas. The result is an Arrow-built
+local relation: collecting it starts no job and no Python worker. This
+is the reference's single-process search, without a broadcast, an
+exchange or a Python-worker stage.
+
+**Distributed plan** (above the threshold, or threshold ``-1``):
+
+3. the query map becomes a broadcast variable; the batch's distinct
+   terms, an Arrow-built relation the JVM reads with no Python worker,
+   are broadcast-joined to the block table — the distributed
+   ``select_posting_lists``. Each candidate row is a distinct
    (token, block), NOT a (query, token, block): a block blob crosses
    the wire and is decoded **once** no matter how many queries in the
    batch share the term;
-2. candidate blocks are grouped by ``bucket = block_id mod n_buckets``:
+4. candidate blocks are grouped by ``bucket = block_id mod n_buckets``:
    block ranges are aligned across terms (operators/postings.py), so a
    bucket owns complete doc ranges and every document's full score for
    every query is computable locally;
-3. inside each bucket an Arrow-batched kernel runs, per query,
+5. inside each bucket an Arrow-batched kernel runs, per query,
    range-synchronized block-max WAND: doc ranges are visited in
    descending upper bound (sum of the participating terms' block
    maxima); once the running k-th best score exceeds the next range's
@@ -27,42 +45,57 @@ distributed, pruned equivalent:
    slice. Decoding every candidate is cheaper than decoding only the
    visited ones blob by blob: one joined-buffer pass over 3,397 blobs
    (70k postings) takes 27 ms against 757 ms one blob at a time;
-4. a final top-k window merges the per-bucket candidates.
+6. a final top-k window merges the per-bucket candidates.
 
 Rank safety: a skipped doc's true score is <= its range bound < theta.
 Scores are float64 and per-doc summation is done in a fixed token
 order, so results are rank-identical to the naive Catalyst scorer
-(operators/search.py) — differential-tested in tests/test_wand.py.
+(operators/search.py) — differential-tested on both plans in
+tests/test_wand.py.
 
-Per-call Spark job budget (default knobs, span known to the handle):
-the queries collect, the term broadcast, the two scoring stages (the
-bucket exchange feeding the kernel, the top-k window exchange) and the
-result — five jobs, pinned in tests/test_wand.py.
+Per-call Spark job budget (default knobs, span known to the handle),
+pinned in tests/test_wand.py: the driver plan runs two jobs — the
+queries collect and the candidate collect. The distributed plan runs
+five: the queries collect, the term broadcast, the two scoring stages
+(the bucket exchange feeding the kernel, the top-k window exchange)
+and the result.
 
 Scale notes: the shuffle key is the bucket, so per-task memory is
 (candidate blocks / n_buckets) regardless of query-batch size; the
 per-query state inside the kernel is a bounded top-k. For very large
 query batches the caller splits the batch (queries are independent),
-keeping the broadcast query map small.
+keeping the broadcast query map small. The driver plan holds at most
+the blocks of the batch's terms, and the whole table is below the
+broadcast threshold.
 """
 
 from __future__ import annotations
 
+import logging
+import types
 from typing import Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..config import FoldedBM25
 from ..functions.bm25 import tokenscore_np
 from ..functions.codec import decode_blocks
 from ..plans.build import BM25Index, block_span
-from .search import prune_postings_to, query_term_map
+from .search import in_list, prune_postings_to, query_term_map
+
+_log = logging.getLogger(__name__)
+# one debug record per call: plan, estimate bytes, threshold, candidate
+# rows (None on the distributed plan, whose candidates stay in Spark)
+_PLAN_RECORD = "wand plan=%s estimate_bytes=%d threshold=%d candidate_rows=%s"
 
 _OUT_SCHEMA = "query_id long, doc_id long, score double"
+# the columns _bucket_kernel reads: all the driver plan collects
+_KERNEL_COLS = ("token", "block_id", "first_doc", "ndocs", "max_impact", "span", "blob")
 
 # default bucket sizing: fold the block space so each bucket holds at
 # least this many doc ranges — theta then carries across enough ranges
@@ -80,16 +113,22 @@ class WandCounters:
     """Spark accumulators recording the WAND kernel's pruning work.
 
     Pass an instance as ``search_bm25_wand(..., counters=...)`` and read
-    after the action completes. Semantics (per (bucket, query_group)
-    task, summed):
+    after the action completes; on the driver plan the kernel runs in
+    the call itself and adds to the accumulators on the driver.
+    Semantics (per kernel run — one per (bucket, query_group) task on
+    the distributed plan, one per call on the driver plan — summed):
 
     - ``block_rows``     candidate (token, block) rows shipped to kernels
     - ``blocks_decoded`` blobs decompressed; decode is one eager pass
-                         over every row a task receives, so this equals
-                         ``block_rows``
+                         over every row a kernel receives, so this
+                         equals ``block_rows`` on both plans
     - ``ranges_scored``  doc ranges visited by the per-signature WAND loop
     - ``ranges_pruned``  doc ranges skipped because their block-max upper
                          bound fell below the running k-th score (theta)
+
+    The range counts depend on the plan: the driver plan scores every
+    range as one bucket, so theta carries across all of a query's
+    ranges, while the distributed plan restarts theta in each bucket.
 
     Diagnostic only: Spark re-runs failed/ speculative tasks, which can
     double-count — fine for evidence, not for billing."""
@@ -448,6 +487,69 @@ def _default_query_groups(index: BM25Index, n_buckets: int) -> int:
     return max(1, min(MAX_DEFAULT_QUERY_GROUPS, shuffle // max(1, n_buckets)))
 
 
+def _size_estimate(df: DataFrame) -> int:
+    """Catalyst's size estimate of ``df`` in bytes, read from plan
+    statistics without starting a job. A plan without statistics (an
+    uncached derived relation) reports ``spark.sql.defaultSizeInBytes``,
+    Long.MaxValue by default."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def _broadcast_threshold(spark) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
+    (-1 disables broadcasting, and with it the driver plan)."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+
+
+def _accept(blocks: DataFrame, min_ndocs: Optional[int],
+            max_ndocs: Optional[int]) -> DataFrame:
+    """accept_posting_list veto (src/bm25invfilesearch.jl:32-38) as a
+    pushed-down predicate on list length — same semantics as the naive
+    scorer's bounds (blocks carry the token's total ndocs)."""
+    if min_ndocs is not None:
+        blocks = blocks.filter(F.col("ndocs") >= min_ndocs)
+    if max_ndocs is not None:
+        blocks = blocks.filter(F.col("ndocs") <= max_ndocs)
+    return blocks
+
+
+def _driver_topk(index: BM25Index, qmap: dict, orig: Optional[list], terms: list,
+                 k: int, id_field: StructField, counters: Optional[WandCounters],
+                 accept_min_ndocs: Optional[int], accept_max_ndocs: Optional[int]):
+    """The driver plan: ONE Arrow collect of the batch's candidate
+    blocks, :func:`_bucket_kernel` over all of them as one bucket, and
+    the (score desc, doc asc) ranking in pandas. Returns the result as
+    an Arrow-built local relation — collecting it starts no job — and
+    the candidate row count."""
+    blocks = index.blocks
+    if "replica" in blocks.columns:
+        # a replica-exploded table holds G identical copies of every
+        # block row; keep one, or the kernel would G-fold-count it
+        blocks = blocks.filter(F.col("replica") == 0)
+    blocks = _accept(blocks, accept_min_ndocs, accept_max_ndocs)
+    cand = blocks.filter(in_list("token", terms)).select(*_KERNEL_COLS).toPandas()
+    # the kernel reads ``.value`` of its query map: a plain holder here
+    top = _bucket_kernel(index.bm25, k, types.SimpleNamespace(value=qmap), 1,
+                         counters)(cand)
+    # one bucket: the kernel's output already is each query's top k
+    top = top.sort_values(["query_id", "score", "doc_id"], ascending=[True, False, True],
+                          kind="mergesort", ignore_index=True)
+    qid = top["query_id"].to_numpy(dtype=np.int64)
+    out = pd.DataFrame({
+        id_field.name: qid if orig is None else pd.Series([orig[j] for j in qid], dtype=object),
+        "rank": (top.groupby("query_id", sort=False).cumcount() + 1).to_numpy(dtype=np.int32),
+        "doc_id": top["doc_id"].to_numpy(dtype=np.int64),
+        "score": top["score"].to_numpy(dtype=np.float64),
+    })
+    schema = StructType([
+        StructField(id_field.name, id_field.dataType),
+        StructField("rank", IntegerType()),
+        StructField("doc_id", LongType()),
+        StructField("score", DoubleType()),
+    ])
+    return index.spark.createDataFrame(out, schema), len(cand)
+
+
 def search_bm25_wand(index: BM25Index, queries: DataFrame, k: int = 10,
                      **knobs) -> DataFrame:
     """(query_id, rank, doc_id, score) — rank-identical to search_bm25.
@@ -455,9 +557,23 @@ def search_bm25_wand(index: BM25Index, queries: DataFrame, k: int = 10,
     Keyword knobs are :func:`_wand_plan`'s: those of search_bm25,
     ``prune_scan``, ``counters`` and the scoring-stage shape below.
 
-    Two independent knobs shape the scoring stage — BOTH have adaptive
-    defaults, so knob-free callers get near-optimal parallelism on
-    both corpus shapes (r04 verdict item 8):
+    Serving plan: when Catalyst's size estimate of ``index.blocks`` is
+    at most ``spark.sql.autoBroadcastJoinThreshold`` (10 MB by
+    default), the call scores on the driver — one Arrow collect of the
+    batch's candidate blocks, the same kernel over them as one bucket —
+    and returns a local relation (two jobs per call, none to collect
+    the result). The scoring-stage knobs below and ``prune_scan`` then
+    have no effect. Catalyst computes a DataFrame's estimate once: a
+    cached blocks table materialized before the first call reports its
+    in-memory size, one that is not reports the estimate of the plan
+    that fills it. An unknown estimate (an uncached derived plan, a
+    catalog table without statistics) counts as large. Set the
+    threshold to ``-1`` to force the distributed plan for every index,
+    as tests/conftest.py does.
+
+    Two independent knobs shape the distributed scoring stage — BOTH
+    have adaptive defaults, so knob-free callers get near-optimal
+    parallelism on both corpus shapes (r04 verdict item 8):
 
     - ``n_buckets`` — how many doc-range buckets the block space folds
       into. FEWER buckets = more ranges per bucket = deeper BMW pruning
@@ -492,11 +608,11 @@ def search_bm25_wand(index: BM25Index, queries: DataFrame, k: int = 10,
     n_buckets so each bucket holds >= MIN_RANGES_PER_BUCKET ranges and
     raise query_groups for parallelism.
 
-    Deployment note: the scoring stage's parallelism is at most
-    ``min(n_buckets * query_groups, spark.sql.shuffle.partitions)``,
-    and often less, because applyInPandas runs same-partition groups
-    serially inside one task and two mechanisms stack groups into one
-    partition:
+    Deployment note (distributed plan): the scoring stage's
+    parallelism is at most ``min(n_buckets * query_groups,
+    spark.sql.shuffle.partitions)``, and often less, because
+    applyInPandas runs same-partition groups serially inside one task
+    and two mechanisms stack groups into one partition:
 
     - hash placement: (bucket, qgrp) keys hash onto partitions with
       collisions — the 4 groups of a one-bucket index land on 3 of 4
@@ -533,8 +649,8 @@ def _wand_plan(
     accept_max_ndocs: Optional[int] = None,
 ):
     """:func:`search_bm25_wand`'s plan plus the query-map broadcast it
-    reads (None for an empty batch), so a caller that materializes the
-    result can release the broadcast explicitly."""
+    reads (None for an empty batch and on the driver plan), so a caller
+    that materializes the result can release the broadcast explicitly."""
     assert index.blocks is not None, "build_posting_blocks first (or io.load_index)"
     from .postings import validate_blocks_schema
 
@@ -548,6 +664,48 @@ def _wand_plan(
     if group_mode not in ("shuffle", "kernel"):
         raise ValueError(f"group_mode must be 'shuffle' or 'kernel', got {group_mode!r}")
     spark = index.spark
+    # ONE pre-job: the driver-side front end collects the query texts
+    # and tokenizes them into {query_id: term tuple} — bounded by
+    # batch_size x query terms (callers split huge batches; queries are
+    # independent). The kernel reads it as its query map, and its
+    # distinct terms select the candidate blocks. The candidate rows
+    # stay BARE (token, block) — no per-row id lists.
+    raw = query_term_map(index, queries, query_col=query_col, id_col=id_col,
+                         typo_tolerant=typo_tolerant, maxdist=maxdist)
+    if not raw:
+        # empty result with the CALLER's id type, not a hardcoded long
+        return (
+            queries.select(F.col(id_col)).limit(0)
+            .withColumn("rank", F.lit(None).cast("int"))
+            .withColumn("doc_id", F.lit(None).cast("long"))
+            .withColumn("score", F.lit(None).cast("double"))
+        ), None
+    # the kernel wants integral ids (int64 output arrays + the
+    # query_groups hash); non-integral ids (strings, decimals — fully
+    # supported by search_bm25, and this path is documented as
+    # rank-identical to it) get dense surrogates here and are mapped
+    # back after the kernel
+    int_ids = all(isinstance(i, int) and not isinstance(i, bool) for i in raw)
+    if int_ids:
+        qmap = raw
+        orig = None
+    else:
+        # nulls first: a null id is a valid query key (search_bm25
+        # ranks it), but None does not order against other ids
+        orig = sorted(raw, key=lambda o: (o is not None, o))
+        qmap = {j: raw[o] for j, o in enumerate(orig)}
+    terms = sorted({t for ts in qmap.values() for t in ts})
+    id_field = queries.schema[id_col]
+
+    estimate = _size_estimate(index.blocks)
+    threshold = _broadcast_threshold(spark)
+    if 0 <= estimate <= threshold:
+        out, n_cand = _driver_topk(index, qmap, orig, terms, k, id_field,
+                                   counters, accept_min_ndocs, accept_max_ndocs)
+        _log.debug(_PLAN_RECORD, "driver", estimate, threshold, n_cand)
+        return out, None
+    _log.debug(_PLAN_RECORD, "distributed", estimate, threshold, None)
+
     pre_n = getattr(index, "prebucket_n", None)
     if n_buckets is None:
         # adopt the partition-resident bucketing when one exists — the
@@ -583,42 +741,11 @@ def _wand_plan(
         # Results are identical by construction (see group_mode docs).
         group_mode = "kernel"
 
-    # ONE pre-job: the driver-side front end collects the query texts
-    # and tokenizes them into {query_id: term tuple} — bounded by
-    # batch_size x query terms (callers split huge batches; queries are
-    # independent). It becomes (a) a broadcast VARIABLE read by the
-    # kernel, and (b) the distinct term set for the candidate join +
-    # optional scan pushdown. The candidate rows stay BARE
-    # (token, block) — no per-row id lists.
-    raw = query_term_map(index, queries, query_col=query_col, id_col=id_col,
-                         typo_tolerant=typo_tolerant, maxdist=maxdist)
-    if not raw:
-        # empty result with the CALLER's id type, not a hardcoded long
-        return (
-            queries.select(F.col(id_col)).limit(0)
-            .withColumn("rank", F.lit(None).cast("int"))
-            .withColumn("doc_id", F.lit(None).cast("long"))
-            .withColumn("score", F.lit(None).cast("double"))
-        ), None
-    # the kernel wants integral ids (int64 output arrays + the
-    # query_groups hash); non-integral ids (strings, decimals — fully
-    # supported by search_bm25, and this path is documented as
-    # rank-identical to it) get dense surrogates here and are mapped
-    # back by a broadcast join after the kernel
-    int_ids = all(isinstance(i, int) and not isinstance(i, bool) for i in raw)
-    if int_ids:
-        qmap = raw
-        idmap = None
-    else:
-        # nulls first: a null id is a valid query key (search_bm25
-        # ranks it), but None does not order against other ids
-        orig = sorted(raw, key=lambda o: (o is not None, o))
-        qmap = {j: raw[o] for j, o in enumerate(orig)}
-        idmap = spark.createDataFrame(
-            list(enumerate(orig)),
-            f"query_id long, __orig_id {queries.schema[id_col].dataType.simpleString()}")
+    idmap = None if orig is None else spark.createDataFrame(
+        pd.DataFrame({"query_id": np.arange(len(orig), dtype=np.int64),
+                      "__orig_id": pd.Series(orig, dtype=object)}),
+        f"query_id long, __orig_id {id_field.dataType.simpleString()}")
     bq = spark.sparkContext.broadcast(qmap)
-    terms = sorted({t for ts in qmap.values() for t in ts})
 
     blocks = index.blocks
     if "bucket" in blocks.columns and not resident:
@@ -630,13 +757,7 @@ def _wand_plan(
         # exactly one copy of every block row (replica 0 — all replicas
         # are identical), or the scorer would G-fold-count every blob
         blocks = blocks.filter(F.col("replica") == 0).drop("replica")
-    # accept_posting_list veto (src/bm25invfilesearch.jl:32-38) as a
-    # pushed-down predicate on list length — same semantics as the
-    # naive scorer's bounds (blocks carry the token's total ndocs)
-    if accept_min_ndocs is not None:
-        blocks = blocks.filter(F.col("ndocs") >= accept_min_ndocs)
-    if accept_max_ndocs is not None:
-        blocks = blocks.filter(F.col("ndocs") <= accept_max_ndocs)
+    blocks = _accept(blocks, accept_min_ndocs, accept_max_ndocs)
     if prune_scan:
         # literal IN reaches parquet/Iceberg row-group min-max pruning
         # on a persisted index; pointless for cached in-memory blocks
