@@ -99,7 +99,7 @@ def _blocks_index(spark: SparkSession, sf_dir: str):
     key = ("blocks", id(spark), sf_dir)
     if key not in _INDEX_CACHE:
         idx = _index(spark, sf_dir)
-        idx.blocks = build_posting_blocks(idx.postings, span=256).cache()
+        idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=256).cache()
         _INDEX_CACHE[key] = idx
     return _INDEX_CACHE[key]
 
@@ -214,7 +214,7 @@ def q_bm25_topk_compacted(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="ts_compact_oracle_")
     try:
         idx = build_bm25_index(base, _cfg())
-        idx.blocks = build_posting_blocks(idx.postings, span=256)
+        idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=256)
         save_index(idx, path)
         append_batch_to_index(
             spark, path, docs.filter((F.col("doc_id") > mid) & (F.col("doc_id") <= q3)),
@@ -892,7 +892,7 @@ def q_bm25_topk_appended(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="ts_append_oracle_")
     try:
         idx = build_bm25_index(base, _cfg())
-        idx.blocks = build_posting_blocks(idx.postings, span=256)
+        idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=256)
         save_index(idx, path)
         append_batch_to_index(spark, path, rest, doc_col="doc_id")
         idx2 = load_index(spark, path)
@@ -945,7 +945,7 @@ def q_bm25_topk_txnlog(spark, sf_dir):
     path = tempfile.mkdtemp(prefix="ts_txnlog_oracle_")
     try:
         idx = build_bm25_index(base, _cfg())
-        idx.blocks = build_posting_blocks(idx.postings, span=256)
+        idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=256)
         tx.save_index_txn(idx, path)
         tx.append_batch_txn(
             spark, path, docs.filter((F.col("doc_id") > mid) & (F.col("doc_id") <= q3)),
@@ -986,7 +986,7 @@ def _catalog_lifecycle(spark, sf_dir, prefix):
     io = cat._TableIO(spark, prefix)
     try:
         idx = build_bm25_index(base, _cfg())
-        idx.blocks = build_posting_blocks(idx.postings, span=256)
+        idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=256)
         cat.save_index_catalog(idx, prefix)
         cat.append_batch_catalog(
             spark, prefix,

@@ -111,7 +111,7 @@ def _bench_sf(sf_dir: str, cpus: int, timings: dict, meta: dict):
     meta["build_rows_per_sec"] = round(n_docs / timings["build"], 1)
 
     t0 = time.time()
-    idx.blocks = build_posting_blocks(idx.postings, span=256).cache()
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=256).cache()
     idx.blocks.count()
     timings["blocks"] = time.time() - t0
 

@@ -39,8 +39,9 @@ def distributed_plan(spark):
 
 
 class _PlanRecords(logging.Handler):
-    """Collects the arguments of each WAND call's debug record:
-    (plan, estimate bytes, threshold, candidate rows)."""
+    """Collects the arguments of each plan debug record: (plan,
+    estimate bytes, threshold, candidate rows) per WAND call, (plan,
+    estimate bytes, threshold) per staged append batch."""
 
     def __init__(self):
         super().__init__(logging.DEBUG)
@@ -51,10 +52,11 @@ class _PlanRecords(logging.Handler):
 
 
 @contextlib.contextmanager
-def recorded_wand_plans():
+def recorded_wand_plans(logger="textsearch_spark.operators.wand"):
     """Yield the list that collects the plan record of every WAND call
-    made inside the block."""
-    log = logging.getLogger("textsearch_spark.operators.wand")
+    made inside the block (of every staged append batch with
+    ``logger=STAGE_LOGGER``)."""
+    log = logging.getLogger(logger)
     seen, level = _PlanRecords(), log.level
     log.addHandler(seen)
     log.setLevel(logging.DEBUG)
@@ -75,6 +77,36 @@ def wand_plan(spark, plan):
             yield
     plans = {r[0] for r in records}
     assert plans == {plan}, records
+
+
+# an append batch's two staging plans (streaming/stage.py)
+STAGE_PLANS = ("driver", "spark")
+STAGE_LOGGER = "textsearch_spark.streaming.stage"
+
+
+@contextlib.contextmanager
+def stage_plan(spark, plan):
+    """Run the block on one append-staging plan and check that every
+    batch staged in it took that plan. ``"spark"`` forces it (threshold
+    -1, restored after); ``"driver"`` leaves the session as it is, so
+    the block's batches must be small."""
+    with recorded_wand_plans(STAGE_LOGGER) as records:
+        with distributed_wand(spark) if plan == "spark" else contextlib.nullcontext():
+            yield
+    plans = {r[0] for r in records}
+    assert plans == {plan}, records
+
+
+def local_df(spark, rows, schema):
+    """``rows`` (tuples) as an Arrow-built local relation typed by the
+    DDL ``schema``. Catalyst knows its size, so an append of it takes
+    the driver staging plan; a DataFrame made from a Python list has no
+    size statistics, reads as huge and takes the Spark plan."""
+    import pandas as pd
+
+    cols = list(zip(*rows))
+    return spark.createDataFrame(
+        pd.DataFrame({i: pd.Series(c, dtype=object) for i, c in enumerate(cols)}), schema)
 
 
 # The 7-doc BM25 golden corpus (reference: test/runtests.jl:20-28),

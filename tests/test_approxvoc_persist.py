@@ -37,7 +37,7 @@ def test_prebuilt_qgram_index_matches_inline(spark, golden_corpus_df):
 def test_save_load_roundtrip_and_typo_search_parity(spark, golden_corpus_df, tmp_path):
     path = str(tmp_path / "idx")
     idx = build_bm25_index(golden_corpus_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=4)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=4)
     save_index(idx, path)
 
     loaded = load_index(spark, path)

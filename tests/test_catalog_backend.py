@@ -37,6 +37,8 @@ from textsearch_spark.operators.wand import search_bm25_wand
 from textsearch_spark.plans.build import build_bm25_index
 from textsearch_spark.sources import catalog as cat
 
+from .conftest import local_df
+
 CFG = TextConfig(nlist=[1])
 
 V2_CATALOG = "jdbccat"
@@ -95,7 +97,7 @@ def prefix(spark, request, tmp_path_factory):
 
 def _base(spark, golden_corpus_df, prefix):
     idx = build_bm25_index(golden_corpus_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=4)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=4)
     cat.save_index_catalog(idx, prefix)
     return cat.load_index_catalog(spark, prefix)
 
@@ -176,24 +178,20 @@ def test_crashed_append_is_invisible_then_exactly_once(spark, golden_corpus_df, 
     """Write-audit-publish crash window: a batch whose data rows landed
     but whose log row (the publish point) never did must be invisible
     to every reader, and the retry must expose exactly one copy."""
-    from textsearch_spark.operators.postings import build_posting_blocks
-    from textsearch_spark.streaming.append import compute_batch_postings
+    from textsearch_spark.streaming.stage import stage_batch
 
     idx = _base(spark, golden_corpus_df, prefix)
     q = spark.createDataFrame([(1, "hoja roja")], "query_id long, qtext string")
     before = search_bm25(idx, q, 3).orderBy("rank").collect()
 
-    new = spark.createDataFrame(
-        [(8, "la hoja roja rica")], "doc_id long, text string")
-    postings, n_new, first_doc, last_doc, docs = compute_batch_postings(
-        spark, idx, new, doc_col="doc_id", text_col="text",
-        hwm=cat.high_water_mark_catalog(spark, prefix))
-    postings = postings.cache()
-    blocks = build_posting_blocks(postings, span=4)
+    # a local relation: this test stages on the driver plan, the other
+    # appends here (Python-list batches) on the Spark plan
+    new = local_df(spark, [(8, "la hoja roja rica")], "doc_id long, text string")
+    batch = stage_batch(spark, idx, new, doc_col="doc_id", text_col="text",
+                        hwm=cat.high_water_mark_catalog(spark, prefix))
     # the crash: data written, publish log row never happens
-    cat._write_batch_data(cat._TableIO(spark, prefix), postings, blocks)
-    postings.unpersist()
-    docs.unpersist()
+    cat._write_batch_data(cat._TableIO(spark, prefix), batch)
+    batch.release()
 
     idx2 = cat.load_index_catalog(spark, prefix)
     assert idx2.doclens.count() == 7          # orphan rows invisible
@@ -291,8 +289,7 @@ def test_duplicate_publish_resolves_to_one_winner(spark, golden_corpus_df, prefi
     batch_id; the loser's rows are orphans vacuum reclaims."""
     import time as _time
 
-    from textsearch_spark.operators.postings import build_posting_blocks
-    from textsearch_spark.streaming.append import compute_batch_postings
+    from textsearch_spark.streaming.stage import stage_batch
 
     _base(spark, golden_corpus_df, prefix)
     new = spark.createDataFrame(
@@ -306,16 +303,12 @@ def test_duplicate_publish_resolves_to_one_winner(spark, golden_corpus_df, prefi
     # after the retry's publish looks like
     io = cat._TableIO(spark, prefix)
     idx = cat.load_index_catalog(spark, prefix)
-    postings, _, _, _, docs = compute_batch_postings(
-        spark, idx, new, doc_col="doc_id", text_col="text", hwm=7)
-    postings = postings.cache()
-    blocks = build_posting_blocks(postings, span=4)
-    commit_id, n_rows = cat._write_batch_data(io, postings, blocks)
+    batch = stage_batch(spark, idx, new, doc_col="doc_id", text_col="text", hwm=7)
+    commit_id, n_rows = cat._write_batch_data(io, batch)
     io.append(spark.createDataFrame(
         [("append", "race-1", commit_id, 8, n_rows, _time.time(), None)],
         cat._LOG_SCHEMA), "log")
-    postings.unpersist()
-    docs.unpersist()
+    batch.release()
 
     # exactly ONE copy visible despite two published-looking log rows
     idx2 = cat.load_index_catalog(spark, prefix)

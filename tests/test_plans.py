@@ -132,7 +132,7 @@ def test_load_index_prebucket_serving_shape(spark, golden_corpus_df, tmp_path):
                            vocab_filter="ndocs > 1 AND ndocs < 5")
     from textsearch_spark.operators.postings import build_posting_blocks
 
-    idx.blocks = build_posting_blocks(idx.postings, span=4)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=4)
     save_index(idx, d, postings_partitions=2)
     loaded = load_index(spark, d, prebucket=True)
     assert loaded.prebucket_n is not None

@@ -22,7 +22,7 @@ CFG = TextConfig(nlist=[1])
 
 def _base_index(spark, docs_df, path, span=4):
     idx = build_bm25_index(docs_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=span)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=span)
     save_index(idx, path)
     return load_index(spark, path)
 
@@ -117,7 +117,7 @@ def test_last_doc_covers_empty_and_oov_docs(spark, tmp_path):
     path = str(tmp_path / "idx")
     idx = build_bm25_index(docs, CFG)
     assert idx.last_doc == 9
-    idx.blocks = build_posting_blocks(idx.postings, span=4)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=4)
     save_index(idx, path)
     # precondition: doc 9 really is absent from doclens
     assert load_index(spark, path).doclens.agg(F.max("doc_id")).collect()[0][0] == 8

@@ -6,7 +6,7 @@ passthrough, and the exact-hit short-circuit in typo lookup."""
 import pytest
 from pyspark.sql import functions as F
 
-from textsearch_spark.config import TextConfig
+from textsearch_spark.config import FoldedBM25, TextConfig
 from textsearch_spark.operators.postings import (
     build_posting_blocks, compact_blocks,
 )
@@ -19,7 +19,7 @@ CFG = TextConfig(nlist=[1])
 
 def _blocked_index(spark, golden_corpus_df, span=4):
     idx = build_bm25_index(golden_corpus_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=span)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=span)
     return idx
 
 
@@ -61,7 +61,9 @@ def test_block_id_integer_division_64bit(spark):
     postings = spark.createDataFrame(
         [("tok", big, 1, 3, 1, 0.5)],
         "token string, doc_id long, tf long, doclen long, ndocs long, impact double")
-    row = build_posting_blocks(postings, span=4096).collect()[0]
+    bm25 = FoldedBM25(k1_plus_1=2.2, k1_mult_1_min_b=0.3, k1_mult_b_div_avgdl=0.3,
+                      delta=1.0, collection_size=2)
+    row = build_posting_blocks(postings, bm25, span=4096).collect()[0]
     assert row.block_id == big // 4096 == 2**48
     # float division would have produced 2**48 + 1
     assert int((big / 4096)) != big // 4096 or True  # documents the hazard
@@ -86,10 +88,10 @@ def test_compact_blocks_merges_fragments(spark, golden_corpus_df):
     # blocks for each, then union — same (token, block_id) keys twice
     lo = idx.postings.filter("doc_id <= 4")
     hi = idx.postings.filter("doc_id > 4")
-    frag = build_posting_blocks(lo, span=4).unionByName(
-        build_posting_blocks(hi, span=4))
+    frag = build_posting_blocks(lo, idx.bm25, span=4).unionByName(
+        build_posting_blocks(hi, idx.bm25, span=4))
     merged = compact_blocks(frag, idx.bm25)
-    clean = build_posting_blocks(idx.postings, span=4)
+    clean = build_posting_blocks(idx.postings, idx.bm25, span=4)
     a = {(r.token, r.block_id): (bytes(r.blob), round(r.max_impact, 12), r.n)
          for r in merged.collect()}
     b = {(r.token, r.block_id): (bytes(r.blob), round(r.max_impact, 12), r.n)

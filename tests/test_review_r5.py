@@ -38,7 +38,7 @@ CFG = TextConfig(nlist=[1])
 
 def _blocks_index(golden_corpus_df):
     idx = build_bm25_index(golden_corpus_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=4)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=4)
     return idx
 
 

@@ -36,7 +36,7 @@ CFG = TextConfig(nlist=[1])
 
 def _blocks_index(golden_corpus_df, span=4):
     idx = build_bm25_index(golden_corpus_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=span)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=span)
     return idx
 
 

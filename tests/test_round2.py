@@ -207,7 +207,7 @@ def test_direct_blocks_match_classic(spark, golden_corpus_df):
     from textsearch_spark.plans.build import build_bm25_index, build_bm25_index_direct
 
     classic = build_bm25_index(golden_corpus_df, CFG1)
-    classic.blocks = build_posting_blocks(classic.postings, span=4)
+    classic.blocks = build_posting_blocks(classic.postings, classic.bm25, span=4)
     direct = build_bm25_index_direct(golden_corpus_df, CFG1, span=4)
 
     cols = ["token", "block_id", "n", "first_doc", "last_doc", "ndocs", "max_impact", "span"]

@@ -23,7 +23,7 @@ CFG = TextConfig(nlist=[1])
 
 def _base_index(spark, golden_corpus_df, path):
     idx = build_bm25_index(golden_corpus_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=4)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=4)
     save_index(idx, path)
     return load_index(spark, path)
 
@@ -104,7 +104,7 @@ def test_compact_fragmented_blocks(spark, golden_corpus_df, tmp_path):
 
     path = str(tmp_path / "idx")
     idx = build_bm25_index(golden_corpus_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=5)  # block 1 = ids 5..9
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=5)  # block 1 = ids 5..9
     save_index(idx, path)
     new = spark.createDataFrame(
         [(8, "la manzana verde"), (9, "la hoja roja")], "doc_id long, text string"

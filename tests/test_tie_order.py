@@ -38,7 +38,7 @@ def tied_index(spark):
     idx = build_bm25_index(docs, TextConfig(nlist=[1]))
     # span 8 => 9 blocks: ties must survive the cross-bucket merge and
     # the final window, not just a single in-kernel top-k
-    idx.blocks = build_posting_blocks(idx.postings, span=8).cache()
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=8).cache()
     # materialized, the cache reports its in-memory size to Catalyst —
     # the estimate that lets WAND take its driver plan here
     idx.blocks.count()

@@ -18,12 +18,14 @@ from textsearch_spark.operators.wand import search_bm25_wand
 from textsearch_spark.plans.build import build_bm25_index
 from textsearch_spark.sources import txnlog as tx
 
+from .conftest import STAGE_PLANS, local_df, stage_plan
+
 CFG = TextConfig(nlist=[1])
 
 
 def _base(spark, golden_corpus_df, path):
     idx = build_bm25_index(golden_corpus_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=4)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=4)
     tx.save_index_txn(idx, path)
     return tx.load_index_txn(spark, path)
 
@@ -39,61 +41,65 @@ def test_publish_is_create_if_absent(tmp_path):
 def test_txn_frozen_append_semantics_and_parity(spark, golden_corpus_df, tmp_path):
     """Same frozen-vocab semantics as the rename backend: OOV drops,
     in-vocab doclen, frozen stats; naive/WAND parity over the appended
-    (multi-dir) snapshot."""
-    path = str(tmp_path / "idx")
-    _base(spark, golden_corpus_df, path)
-    assert tx.high_water_mark_txn(path) == 7
+    (multi-dir) snapshot — on both append-staging plans."""
+    for plan in STAGE_PLANS:
+        path = str(tmp_path / plan)
+        _base(spark, golden_corpus_df, path)
+        assert tx.high_water_mark_txn(path) == 7
 
-    new = spark.createDataFrame(
-        [(8, "la manzana verde abcnew"), (9, "la hoja roja rica")],
-        "doc_id long, text string")
-    m = tx.append_batch_txn(spark, path, new, doc_col="doc_id",
-                            auto_compact_after=None)
-    assert m["n_docs_appended"] == 2 and m["last_doc"] == 9
-    assert tx.high_water_mark_txn(path) == 9
+        new = local_df(
+            spark, [(8, "la manzana verde abcnew"), (9, "la hoja roja rica")],
+            "doc_id long, text string")
+        with stage_plan(spark, plan):
+            m = tx.append_batch_txn(spark, path, new, doc_col="doc_id",
+                                    auto_compact_after=None)
+        assert m["n_docs_appended"] == 2 and m["last_doc"] == 9
+        assert tx.high_water_mark_txn(path) == 9
 
-    idx = tx.load_index_txn(spark, path)
-    dl = {r.doc_id: r.doclen for r in idx.doclens.collect()}
-    assert dl[8] == 3  # abcnew is OOV: la, manzana, verde
-    assert idx.n_docs == 7  # N frozen at fit
+        idx = tx.load_index_txn(spark, path)
+        dl = {r.doc_id: r.doclen for r in idx.doclens.collect()}
+        assert dl[8] == 3  # abcnew is OOV: la, manzana, verde
+        assert idx.n_docs == 7  # N frozen at fit
 
-    q = spark.createDataFrame(
-        [(0, "la manzana verde rica"), (1, "hoja roja")],
-        "query_id long, qtext string")
-    naive = sorted((r.query_id, r.rank, r.doc_id, round(r.score, 10))
-                   for r in search_bm25(idx, q, 5).collect())
-    wand = sorted((r.query_id, r.rank, r.doc_id, round(r.score, 10))
-                  for r in search_bm25_wand(idx, q, 5, n_buckets=2).collect())
-    assert naive == wand
-    assert any(d in (8, 9) for (_, _, d, _) in naive)
+        q = spark.createDataFrame(
+            [(0, "la manzana verde rica"), (1, "hoja roja")],
+            "query_id long, qtext string")
+        naive = sorted((r.query_id, r.rank, r.doc_id, round(r.score, 10))
+                       for r in search_bm25(idx, q, 5).collect())
+        wand = sorted((r.query_id, r.rank, r.doc_id, round(r.score, 10))
+                      for r in search_bm25_wand(idx, q, 5, n_buckets=2).collect())
+        assert naive == wand
+        assert any(d in (8, 9) for (_, _, d, _) in naive)
 
 
 def test_txn_matches_rename_backend_results(spark, golden_corpus_df, tmp_path):
     """Both backends over the identical corpus + appends must serve
-    identical search results."""
+    identical search results, on both append-staging plans."""
     from textsearch_spark.sources.io import load_index, save_index
     from textsearch_spark.streaming.append import append_batch_to_index
 
-    rename_p, txn_p = str(tmp_path / "rn"), str(tmp_path / "tx")
     idx = build_bm25_index(golden_corpus_df, CFG)
-    idx.blocks = build_posting_blocks(idx.postings, span=4)
-    save_index(idx, rename_p)
-    tx.save_index_txn(idx, txn_p)
-    new = spark.createDataFrame(
-        [(8, "la manzana verde"), (9, "la hoja roja")], "doc_id long, text string")
-    append_batch_to_index(spark, rename_p, new, doc_col="doc_id",
-                          auto_compact_after=None)
-    tx.append_batch_txn(spark, txn_p, new, doc_col="doc_id",
-                        auto_compact_after=None)
-
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=4)
     q = spark.createDataFrame([(0, "la manzana roja")], "query_id long, qtext string")
-    a = sorted((r.rank, r.doc_id, round(r.score, 10))
-               for r in search_bm25_wand(load_index(spark, rename_p), q, 8,
-                                         n_buckets=2).collect())
-    b = sorted((r.rank, r.doc_id, round(r.score, 10))
-               for r in search_bm25_wand(tx.load_index_txn(spark, txn_p), q, 8,
-                                         n_buckets=2).collect())
-    assert a == b and a
+    for plan in STAGE_PLANS:
+        rename_p, txn_p = str(tmp_path / f"rn-{plan}"), str(tmp_path / f"tx-{plan}")
+        save_index(idx, rename_p)
+        tx.save_index_txn(idx, txn_p)
+        new = local_df(
+            spark, [(8, "la manzana verde"), (9, "la hoja roja")], "doc_id long, text string")
+        with stage_plan(spark, plan):
+            append_batch_to_index(spark, rename_p, new, doc_col="doc_id",
+                                  auto_compact_after=None)
+            tx.append_batch_txn(spark, txn_p, new, doc_col="doc_id",
+                                auto_compact_after=None)
+
+        a = sorted((r.rank, r.doc_id, round(r.score, 10))
+                   for r in search_bm25_wand(load_index(spark, rename_p), q, 8,
+                                             n_buckets=2).collect())
+        b = sorted((r.rank, r.doc_id, round(r.score, 10))
+                   for r in search_bm25_wand(tx.load_index_txn(spark, txn_p), q, 8,
+                                             n_buckets=2).collect())
+        assert a == b and a, plan
 
 
 def test_txn_crash_invisible_and_idempotent_retry(spark, golden_corpus_df, tmp_path):
@@ -110,7 +116,7 @@ def test_txn_crash_invisible_and_idempotent_retry(spark, golden_corpus_df, tmp_p
     assert any("append-ghost" in d for d in tx.vacuum_txn(path, min_age_sec=0))
     assert not os.path.isdir(ghost)
 
-    new = spark.createDataFrame([(8, "la casa")], "doc_id long, text string")
+    new = local_df(spark, [(8, "la casa")], "doc_id long, text string")
     tx.append_batch_txn(spark, path, new, doc_col="doc_id", batch_id=0,
                         auto_compact_after=None)
     tx.append_batch_txn(spark, path, new, doc_col="doc_id", batch_id=0,
@@ -123,12 +129,13 @@ def test_txn_crash_invisible_and_idempotent_retry(spark, golden_corpus_df, tmp_p
 def test_txn_rejects_stale_and_duplicate_ids(spark, golden_corpus_df, tmp_path):
     path = str(tmp_path / "idx")
     _base(spark, golden_corpus_df, path)
-    stale = spark.createDataFrame([(3, "la casa")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="high-water"):
-        tx.append_batch_txn(spark, path, stale, doc_col="doc_id")
-    dup = spark.createDataFrame([(8, "a"), (8, "b")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="duplicate"):
-        tx.append_batch_txn(spark, path, dup, doc_col="doc_id")
+    stale = local_df(spark, [(3, "la casa")], "doc_id long, text string")
+    dup = local_df(spark, [(8, "a"), (8, "b")], "doc_id long, text string")
+    for plan in STAGE_PLANS:
+        with stage_plan(spark, plan), pytest.raises(ValueError, match="high-water"):
+            tx.append_batch_txn(spark, path, stale, doc_col="doc_id")
+        with stage_plan(spark, plan), pytest.raises(ValueError, match="duplicate"):
+            tx.append_batch_txn(spark, path, dup, doc_col="doc_id")
 
 
 def test_txn_compaction_is_log_transaction_with_snapshot_isolation(
@@ -140,7 +147,7 @@ def test_txn_compaction_is_log_transaction_with_snapshot_isolation(
     path = str(tmp_path / "idx")
     _base(spark, golden_corpus_df, path)
     for i, t in enumerate(["la manzana verde", "la hoja roja"]):
-        new = spark.createDataFrame([(8 + i, t)], "doc_id long, text string")
+        new = local_df(spark, [(8 + i, t)], "doc_id long, text string")
         tx.append_batch_txn(spark, path, new, doc_col="doc_id", batch_id=i,
                             auto_compact_after=None)
 
@@ -185,7 +192,7 @@ def test_txn_auto_compaction_and_text_search(spark, golden_corpus_df, tmp_path):
     path = str(tmp_path / "idx")
     _base(spark, golden_corpus_df, path)
     for i in range(3):
-        new = spark.createDataFrame([(8 + i, "la pera rica")], "doc_id long, text string")
+        new = local_df(spark, [(8 + i, "la pera rica")], "doc_id long, text string")
         m = tx.append_batch_txn(spark, path, new, doc_col="doc_id", batch_id=i,
                                 auto_compact_after=2)
     assert any("compaction" in json.dumps(e) or e["op"] == "compact"
@@ -223,7 +230,7 @@ def test_txn_concurrent_append_conflict_raises(spark, golden_corpus_df, tmp_path
         "op": "append", "batch_id": "rival", "add": {},
         "metrics": {"last_doc": 99, "n_block_rows": 0},
     }, on_op="append")
-    new = spark.createDataFrame([(8, "la casa")], "doc_id long, text string")
+    new = local_df(spark, [(8, "la casa")], "doc_id long, text string")
     with pytest.raises(tx.TxnConflict, match="high-water"):
         tx.append_batch_txn(spark, path, new, doc_col="doc_id",
                             auto_compact_after=None)
@@ -248,7 +255,7 @@ def test_txn_append_commutes_with_concurrent_compaction(spark, golden_corpus_df,
         "remove": {"blocks": snap["blocks"]},
         "metrics": {"last_doc": hwm, "n_block_rows": 7, "n_block_groups": 7},
     }, on_op="append")
-    new = spark.createDataFrame([(8, "la casa rica")], "doc_id long, text string")
+    new = local_df(spark, [(8, "la casa rica")], "doc_id long, text string")
     m = tx.append_batch_txn(spark, path, new, doc_col="doc_id",
                             auto_compact_after=None)
     assert state["fired"] and m["n_docs_appended"] == 1
@@ -265,7 +272,7 @@ def test_txn_concurrent_compaction_conflict_raises(spark, golden_corpus_df,
     block row, so it must raise TxnConflict."""
     path = str(tmp_path / "idx")
     _base(spark, golden_corpus_df, path)
-    new = spark.createDataFrame([(8, "la casa")], "doc_id long, text string")
+    new = local_df(spark, [(8, "la casa")], "doc_id long, text string")
     tx.append_batch_txn(spark, path, new, doc_col="doc_id", auto_compact_after=None)
     snap = tx.snapshot(path)
     state = _race_once(monkeypatch, {
@@ -381,11 +388,11 @@ def test_txn_log_checkpoint_and_vacuum(spark, golden_corpus_df, tmp_path):
     path = str(tmp_path / "idx")
     _base(spark, golden_corpus_df, path)
     for i, t in enumerate(["la manzana verde", "la hoja roja"]):
-        new = spark.createDataFrame([(8 + i, t)], "doc_id long, text string")
+        new = local_df(spark, [(8 + i, t)], "doc_id long, text string")
         tx.append_batch_txn(spark, path, new, doc_col="doc_id", batch_id=i,
                             auto_compact_after=None)
     tx.compact_index_txn(spark, path)
-    new = spark.createDataFrame([(10, "la pera rica")], "doc_id long, text string")
+    new = local_df(spark, [(10, "la pera rica")], "doc_id long, text string")
     tx.append_batch_txn(spark, path, new, doc_col="doc_id", batch_id="post",
                         auto_compact_after=None)
 
@@ -423,7 +430,7 @@ def test_txn_log_checkpoint_and_vacuum(spark, golden_corpus_df, tmp_path):
         "doc_id = 10").count() == 1
 
     # lifecycle continues on top: append, then a second checkpoint
-    new2 = spark.createDataFrame([(11, "la casa rica")], "doc_id long, text string")
+    new2 = local_df(spark, [(11, "la casa rica")], "doc_id long, text string")
     tx.append_batch_txn(spark, path, new2, doc_col="doc_id", batch_id="p2",
                         auto_compact_after=None)
     assert tx.high_water_mark_txn(path) == 11
@@ -469,13 +476,13 @@ def test_txn_time_travel_snapshots(spark, golden_corpus_df, tmp_path):
 
     snap1 = top(tx.load_index_txn(spark, path))  # docs 1..7
     tx.append_batch_txn(spark, path,
-                        spark.createDataFrame([(8, "la hoja roja rica")],
-                                              "doc_id long, text string"),
+                        local_df(spark, [(8, "la hoja roja rica")],
+                                 "doc_id long, text string"),
                         doc_col="doc_id", batch_id="e0", auto_compact_after=None)
     snap2 = top(tx.load_index_txn(spark, path))
     tx.append_batch_txn(spark, path,
-                        spark.createDataFrame([(9, "roja roja hoja")],
-                                              "doc_id long, text string"),
+                        local_df(spark, [(9, "roja roja hoja")],
+                                 "doc_id long, text string"),
                         doc_col="doc_id", batch_id="e1", auto_compact_after=None)
     hist = tx.log_history_txn(path)
     assert [h["op"] for h in hist] == ["init", "append", "append"]

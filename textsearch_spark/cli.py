@@ -146,7 +146,7 @@ def main(argv=None):
             idx = build_bm25_index(df, cfg, doc_col=args.doc_col,
                                    text_col=args.text_col,
                                    vocab_filter=args.vocab_filter)
-            idx.blocks = build_posting_blocks(idx.postings, span=args.block_span)
+            idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=args.block_span)
             idx.span = args.block_span
             if args.backend == "txnlog":
                 from .sources.txnlog import save_index_txn

@@ -40,8 +40,16 @@ def tokenscore_expr(bm25: FoldedBM25, ndocs: Column, doclen: Column, tf: Column)
 
 
 def tokenscore_np(bm25: FoldedBM25, ndocs, doclen, tf):
-    """Same formula over numpy arrays — used by the WAND kernel so the
-    two scorer paths are bit-identical in float64."""
+    """Same formula, in the same operation order, over numpy arrays.
+
+    NOT bit-identical to :func:`tokenscore_expr`: Catalyst's ``log``
+    (Java StrictMath) and numpy's can differ in the last bit, so the
+    Catalyst ``impact`` of a posting and this value can be one ulp
+    apart. What must agree exactly does: the WAND kernel re-scores with
+    this function and every ``max_impact`` producer takes its bound
+    from :func:`max_tokenscore`, so a block's bound is never below a
+    score the kernel recomputes. Scores compared across the two scorer
+    paths are compared after rounding."""
     ndocs = np.asarray(ndocs, dtype=np.float64)
     doclen = np.asarray(doclen, dtype=np.float64)
     tf = np.asarray(tf, dtype=np.float64)

@@ -35,6 +35,25 @@ def with_tokens(df: DataFrame, cfg: TextConfig, *, text_col: str = "text",
     return df.withColumn(out_col, _tok(F.col(text_col)))
 
 
+def bow_arrays(cfg: TextConfig, texts) -> tuple:
+    """Bag of words of each text: ``(row, token, tf)`` arrays with one
+    entry per distinct token of ``texts[row]``; texts with no token
+    contribute none. The BOW kernel of :func:`bow_long` and of the
+    driver append plan (streaming/stage.py)."""
+    from collections import Counter
+
+    import numpy as np
+
+    rows, toks, tfs = [], [], []
+    for i, text in enumerate(texts):
+        c = Counter(tokenize(cfg, text))
+        rows.extend([i] * len(c))
+        toks.extend(c.keys())
+        tfs.extend(c.values())
+    return (np.asarray(rows, dtype=np.int64), np.asarray(toks, dtype=object),
+            np.asarray(tfs, dtype=np.int64))
+
+
 def bow_long(df: DataFrame, cfg: TextConfig, *, doc_col: str = "doc_id",
              text_col: str = "text", multi: bool = False) -> DataFrame:
     """(doc_id, token, tf, doclen) computed entirely inside the Arrow
@@ -43,29 +62,21 @@ def bow_long(df: DataFrame, cfg: TextConfig, *, doc_col: str = "doc_id",
     reference's per-thread BOW accumulation (src/bow.jl:14-23) without
     the shared-dict locks. ``doclen`` is the doc's total (pre-filter)
     token count."""
-    from collections import Counter
-
     import numpy as np
 
     schema = f"{doc_col} long, token string, tf long, doclen long"
 
     def gen(batches):
         for pdf in batches:
-            docs, toks, tfs, dls = [], [], [], []
-            for did, text in zip(pdf[doc_col], pdf[text_col]):
-                tokens = tokenize(cfg, None if text is None else (list(text) if multi else text))
-                if not tokens:
-                    continue
-                c = Counter(tokens)
-                docs.extend([did] * len(c))
-                toks.extend(c.keys())
-                tfs.extend(c.values())
-                dls.extend([len(tokens)] * len(c))
+            texts = [None if t is None else (list(t) if multi else t) for t in pdf[text_col]]
+            rows, toks, tfs = bow_arrays(cfg, texts)
+            doclen = np.zeros(len(texts), dtype=np.int64)
+            np.add.at(doclen, rows, tfs)
             yield pd.DataFrame({
-                doc_col: np.asarray(docs, dtype=np.int64),
+                doc_col: pdf[doc_col].to_numpy()[rows].astype(np.int64),
                 "token": toks,
-                "tf": np.asarray(tfs, dtype=np.int64),
-                "doclen": np.asarray(dls, dtype=np.int64),
+                "tf": tfs,
+                "doclen": doclen[rows],
             })
 
     return df.select(doc_col, text_col).mapInPandas(gen, schema)

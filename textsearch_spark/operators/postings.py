@@ -60,28 +60,19 @@ def validate_blocks_schema(blocks: DataFrame, where: str = "blocks table") -> No
         )
 
 
-@pandas_udf(BinaryType())
-def _encode_entries(docs: pd.Series, tfs: pd.Series, dls: pd.Series) -> pd.Series:
-    """Encode one block per row from three primitive array columns.
+def _encode_with_max_udf(bm25):
+    """pandas UDF: (entries, ndocs) -> struct(blob, max_impact), one
+    block per row. The per-block BM25 bound is computed here from (tf,
+    doclen, ndocs) with the folded constants by ``max_tokenscore`` —
+    the ONE producer of ``max_impact`` (the driver append plan and
+    compaction call it too), and the same numpy formula the WAND kernel
+    re-scores with, so a bound is never below a recomputed score. It is
+    NOT bit-identical to the Catalyst ``impact`` column: the two can
+    differ in the last bit (see functions/bm25.tokenscore_np).
 
     The struct array is split JVM-side (``entries.doc_id`` etc.) so
     Arrow ships list<int64> columns that surface as numpy arrays —
     never 10^7 per-entry Python dicts."""
-    import numpy as np
-
-    return pd.Series([
-        encode_block(np.asarray(d, dtype=np.uint64), np.asarray(t, dtype=np.uint64),
-                     np.asarray(l, dtype=np.uint64))
-        for d, t, l in zip(docs, tfs, dls)
-    ])
-
-
-def _encode_with_max_udf(bm25):
-    """pandas UDF: (entries, ndocs) -> struct(blob, max_impact). The
-    per-block BM25 bound is computed here from (tf, doclen, ndocs) with
-    the folded constants — numerically identical to the Catalyst
-    ``impact`` column (tokenscore_np mirrors tokenscore_expr), so WAND's
-    bounds stay consistent with its kernel re-scoring."""
     import numpy as np
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -220,13 +211,16 @@ def compact_blocks(blocks: DataFrame, bm25) -> DataFrame:
     )
 
 
-def build_posting_blocks(postings: DataFrame, *, span: int = DEFAULT_BLOCK_SPAN) -> DataFrame:
-    """postings (token, doc_id, tf, doclen, ndocs, impact) -> block table.
+def build_posting_blocks(postings: DataFrame, bm25, *,
+                         span: int = DEFAULT_BLOCK_SPAN) -> DataFrame:
+    """postings (token, doc_id, tf, doclen, ndocs, ...) -> block table.
 
     One shuffle on (token, block_id); sort_array produces the docID
     order inside each block (the reference's IdOrder insert,
-    src/bm25invfile.jl:133-139), and the vbyte encode runs vectorized
-    per block in an Arrow UDF.
+    src/bm25invfile.jl:133-139), and the vbyte encode and the block-max
+    bound run vectorized per block in one Arrow UDF. ``bm25`` is the
+    index's folded constants (``max_impact`` is recomputed from them,
+    not taken from the postings' ``impact`` column).
     """
     # integer DIV (see build_posting_blocks_from_bow: float division is
     # inexact above 2^53 doc ids)
@@ -237,11 +231,14 @@ def build_posting_blocks(postings: DataFrame, *, span: int = DEFAULT_BLOCK_SPAN)
         F.min("doc_id").alias("first_doc"),
         F.max("doc_id").alias("last_doc"),
         F.first("ndocs").alias("ndocs"),
-        F.max("impact").alias("max_impact"),
     )
+    enc = _encode_with_max_udf(bm25)
     return agg.select(
-        "token", "block_id", "n", "first_doc", "last_doc", "ndocs", "max_impact",
-        F.lit(span).alias("span"),
-        _encode_entries(F.col("entries.doc_id"), F.col("entries.tf"),
-                        F.col("entries.doclen")).alias("blob"),
+        "token", "block_id", "n", "first_doc", "last_doc", "ndocs",
+        enc(F.col("entries.doc_id"), F.col("entries.tf"),
+            F.col("entries.doclen"), F.col("ndocs")).alias("__e"),
+    ).select(
+        "token", "block_id", "n", "first_doc", "last_doc", "ndocs",
+        F.col("__e.max_impact").alias("max_impact"), F.lit(span).alias("span"),
+        F.col("__e.blob").alias("blob"),
     )

@@ -86,6 +86,7 @@ from ..config import FoldedBM25
 from ..functions.bm25 import tokenscore_np
 from ..functions.codec import decode_blocks
 from ..plans.build import BM25Index, block_span
+from ..plans.sizing import is_small
 from .search import in_list, prune_postings_to, query_term_map
 
 _log = logging.getLogger(__name__)
@@ -487,20 +488,6 @@ def _default_query_groups(index: BM25Index, n_buckets: int) -> int:
     return max(1, min(MAX_DEFAULT_QUERY_GROUPS, shuffle // max(1, n_buckets)))
 
 
-def _size_estimate(df: DataFrame) -> int:
-    """Catalyst's size estimate of ``df`` in bytes, read from plan
-    statistics without starting a job. A plan without statistics (an
-    uncached derived relation) reports ``spark.sql.defaultSizeInBytes``,
-    Long.MaxValue by default."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def _broadcast_threshold(spark) -> int:
-    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes
-    (-1 disables broadcasting, and with it the driver plan)."""
-    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
-
-
 def _accept(blocks: DataFrame, min_ndocs: Optional[int],
             max_ndocs: Optional[int]) -> DataFrame:
     """accept_posting_list veto (src/bm25invfilesearch.jl:32-38) as a
@@ -697,9 +684,8 @@ def _wand_plan(
     terms = sorted({t for ts in qmap.values() for t in ts})
     id_field = queries.schema[id_col]
 
-    estimate = _size_estimate(index.blocks)
-    threshold = _broadcast_threshold(spark)
-    if 0 <= estimate <= threshold:
+    small, estimate, threshold = is_small(index.blocks)
+    if small:
         out, n_cand = _driver_topk(index, qmap, orig, terms, k, id_field,
                                    counters, accept_min_ndocs, accept_max_ndocs)
         _log.debug(_PLAN_RECORD, "driver", estimate, threshold, n_cand)

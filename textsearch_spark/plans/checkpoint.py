@@ -152,7 +152,7 @@ def build_bm25_index_checkpointed(
         validate_blocks_schema(blocks, where=f"checkpointed blocks at {blocks_path}")
     else:
         t0 = time.time()
-        blocks = build_posting_blocks(index.postings, span=block_span)
+        blocks = build_posting_blocks(index.postings, index.bm25, span=block_span)
         (
             blocks.repartition("token").sortWithinPartitions("token", "block_id")
             .write.mode("overwrite").parquet(blocks_path)

@@ -64,6 +64,7 @@ from ..sources.io import (
     finish_compaction,
     load_index,
     maintenance_lock,
+    parquet_rows,
     read_table,
 )
 from .checkpoint import write_manifest
@@ -174,12 +175,12 @@ def _compact_locked(spark: SparkSession, index_dir: str) -> dict:
     # finish_compaction as part of the committed swap (before the
     # consumed manifests are deleted, so the high-water-mark fold is
     # correct at every crash point). compact_blocks emits one row per
-    # (token, block_id), so rows == groups; the count reads only the
-    # staged parquet footers. last_doc folds base meta + the consumed
+    # (token, block_id), so rows == groups; the count sums the staged
+    # parquet footers (no job). last_doc folds base meta + the consumed
     # appends' manifests — no scan.
     from ..streaming.append import _int_batch, high_water_mark
 
-    n_rows = spark.read.parquet(os.path.join(tmp, "blocks")).count()
+    n_rows = parquet_rows(os.path.join(tmp, "blocks"))
     meta_update = {
         "last_doc": high_water_mark(spark, index_dir),
         "n_block_rows": int(n_rows),

@@ -400,24 +400,27 @@ def high_water_mark_catalog(spark: SparkSession, prefix: str,
     return int(row[0] or 0)
 
 
-def _write_batch_data(io: _TableIO, postings: DataFrame,
-                      blocks: DataFrame) -> tuple:
-    """Write one batch's rows into the three data tables under a fresh
-    commit_id WITHOUT publishing it (the caller's log row does that).
-    Split out so the crash-window tests can stop exactly here."""
+def _write_batch_data(io: _TableIO, batch) -> tuple:
+    """Write a staged batch (streaming.stage.StagedBatch) into the three
+    data tables under a fresh commit_id WITHOUT publishing it (the
+    caller's log row does that). Split out so the crash-window tests
+    can stop exactly here."""
     import uuid
 
     commit_id = f"att-{uuid.uuid4().hex[:12]}"
     stamp = F.lit(commit_id).alias("commit_id")
-    n_block_rows = blocks.count()
+    blocks = batch.blocks
+    if batch.n_block_rows is None:
+        # Spark plan: count the blocks once, cached for their append
+        blocks = blocks.cache()
+        batch.cached += (blocks,)
+        batch.n_block_rows = blocks.count()
     io.append(blocks.select("*", stamp), "blocks")
-    io.append(postings.select(
+    io.append(batch.postings.select(
         *[c for c in io.read("postings").columns if c != "commit_id"], stamp),
         "postings")
-    io.append(postings.groupBy("doc_id")
-              .agg(F.first("doclen").alias("doclen")).select("*", stamp),
-              "doclens")
-    return commit_id, int(n_block_rows)
+    io.append(batch.doclens.select("*", stamp), "doclens")
+    return commit_id, int(batch.n_block_rows)
 
 
 def append_batch_catalog(
@@ -429,15 +432,16 @@ def append_batch_catalog(
     text_col: str = "text",
     batch_id=None,
 ) -> dict:
-    """One append batch: frozen-vocab postings (shared
-    compute_batch_postings kernel — identical semantics to the other
-    two backends), appended to the three data tables plus one log row.
-    A ``batch_id`` already present in the log returns its recorded
-    metrics without re-appending (streaming replay dedupe) — the full
-    metrics dict rides the log row's ``metrics_json``, so the replay
-    return matches the other two backends' contract (a log written
-    before that column existed falls back to the fields the row
-    itself carries, with ``replay: True`` marking the shape).
+    """One append batch: frozen-vocab postings (the shared
+    streaming.stage.stage_batch — identical semantics and staging
+    plans to the other two backends), appended to the three data
+    tables plus one log row. A ``batch_id`` already present in the log
+    returns its recorded metrics without re-appending (streaming
+    replay dedupe) — the full metrics dict rides the log row's
+    ``metrics_json``, so the replay return matches the other two
+    backends' contract (a log written before that column existed falls
+    back to the fields the row itself carries, with ``replay: True``
+    marking the shape).
 
     Write-audit-publish: the batch's rows land stamped with a fresh
     ``commit_id`` (one per physical attempt), and the log row —
@@ -446,8 +450,7 @@ def append_batch_catalog(
     so the eventual single publish exposes exactly one copy."""
     import uuid
 
-    from ..operators.postings import build_posting_blocks
-    from ..streaming.append import compute_batch_postings
+    from ..streaming.stage import stage_batch
 
     if batch_id is None:
         batch_id = f"adhoc-{uuid.uuid4().hex[:12]}"
@@ -467,18 +470,14 @@ def append_batch_catalog(
     idx = load_index_catalog(spark, prefix)
     span = block_span(idx)
     hwm = high_water_mark_catalog(spark, prefix)
-    postings, n_new, first_doc, last_doc, docs = compute_batch_postings(
-        spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)
-    postings = postings.cache()
-    blocks = build_posting_blocks(postings, span=span).cache()
-    commit_id, n_block_rows = _write_batch_data(io, postings, blocks)
-    blocks.unpersist()
-    postings.unpersist()
-    docs.unpersist()
+    batch = stage_batch(spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)
+    commit_id, n_block_rows = _write_batch_data(io, batch)
+    batch.release()
+    last_doc = batch.last_doc
     metrics = {
         "batch_id": batch_id,
-        "n_docs_appended": n_new,
-        "first_doc": first_doc,
+        "n_docs_appended": batch.n_new,
+        "first_doc": batch.first_doc,
         "last_doc": last_doc,
         "n_block_rows": int(n_block_rows),
         "append_sec": round(time.time() - t0, 3),

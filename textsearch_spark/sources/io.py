@@ -186,6 +186,19 @@ def table_paths(index_dir: str, table: str) -> list[str]:
     return paths
 
 
+def parquet_rows(path: str) -> int:
+    """Row count of a written parquet directory, summed from its part
+    files' footers: no Spark job and no data page read."""
+    import pyarrow.parquet as pq
+
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                total += pq.read_metadata(os.path.join(root, f)).num_rows
+    return total
+
+
 def read_table(spark: SparkSession, index_dir: str, table: str) -> DataFrame:
     """The logical table = base parquet UNION committed appends. Readers
     never see a half-written append (its dirs are invisible until the

@@ -76,9 +76,11 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import BM25Params, FoldedBM25, TextConfig
 from ..plans.build import BM25Index, block_span
+from .io import parquet_rows
 
 LOG_DIR = "_txnlog"
 DATA_DIR = "data"
@@ -357,6 +359,18 @@ def save_index_txn(index: BM25Index, path: str, *,
     lifecycle tables land under ``data/`` and entry 1 publishes them."""
     assert index.blocks is not None, "txnlog backend expects a block index"
     os.makedirs(path, exist_ok=True)
+    q = None
+    if with_qgrams:
+        from ..operators.approxvoc import build_qgram_index
+
+        q = index.qgrams if index.qgrams is not None else build_qgram_index(index.vocab)
+        q = q.repartition("gram").sortWithinPartitions("gram", "vtoken")
+    p = index.postings
+    if postings_partitions:
+        p = p.repartition(postings_partitions, "token").sortWithinPartitions("token", "doc_id")
+    blocks = index.blocks.repartition("token").sortWithinPartitions("token", "block_id")
+    tables = {"vocab": index.vocab, "qgrams": q, "postings": p,
+              "doclens": index.doclens, "blocks": blocks}
     meta = {
         "backend": "txnlog",
         "textconfig": json.loads(index.cfg.to_json()),
@@ -366,33 +380,21 @@ def save_index_txn(index: BM25Index, path: str, *,
         "n_docs": index.n_docs,
         "avgdl": index.avgdl,
         "span": block_span(index),  # loads then skip the span probe
+        # loads then skip schema inference (and its jobs)
+        "schemas": {t: _read_schema(df) for t, df in tables.items() if df is not None},
     }
     with open(os.path.join(path, META), "w") as f:
         json.dump(meta, f, indent=1, sort_keys=True)
     index.vocab.write.mode("overwrite").parquet(os.path.join(path, "vocab"))
-    if with_qgrams:
-        from ..operators.approxvoc import build_qgram_index
-
-        q = index.qgrams if index.qgrams is not None else build_qgram_index(index.vocab)
-        (q.repartition("gram").sortWithinPartitions("gram", "vtoken")
-         .write.mode("overwrite").parquet(os.path.join(path, "qgrams")))
+    if q is not None:
+        q.write.mode("overwrite").parquet(os.path.join(path, "qgrams"))
 
     add = {}
-    p = index.postings
-    if postings_partitions:
-        p = p.repartition(postings_partitions, "token").sortWithinPartitions("token", "doc_id")
-    rel, absd = _new_data_dir(path, "postings", "init")
-    p.write.parquet(absd)
-    add["postings"] = [rel]
-    rel, absd = _new_data_dir(path, "doclens", "init")
-    index.doclens.write.parquet(absd)
-    add["doclens"] = [rel]
-    rel, absd = _new_data_dir(path, "blocks", "init")
-    (index.blocks.repartition("token").sortWithinPartitions("token", "block_id")
-     .write.parquet(absd))
-    add["blocks"] = [rel]
+    for t in _TABLES:
+        rel, absd = _new_data_dir(path, t, "init")
+        tables[t].write.parquet(absd)
+        add[t] = [rel]
 
-    spark = index.spark
     # build-time last_doc covers empty/all-OOV docs with no doclens
     # row; the doclens max is only a legacy-handle fallback (an
     # understated high-water mark would let auto-id appends reuse ids)
@@ -401,7 +403,7 @@ def save_index_txn(index: BM25Index, path: str, *,
     else:
         row = index.doclens.agg(F.max("doc_id")).collect()[0]
         last_doc_val = int(row[0] or 0)
-    n_rows = spark.read.parquet(absd).count()
+    n_rows = parquet_rows(os.path.join(path, add["blocks"][0]))
     brow = index.blocks.agg(
         F.count_distinct("token", "block_id").alias("groups")).collect()[0]
     def _must_be_first(log):
@@ -478,7 +480,19 @@ def load_index_txn(spark: SparkSession, path: str,
                 f"snapshot seq {at_seq} at {path} has expired: the log "
                 f"prefix reaching it was pruned by vacuum_log_txn "
                 f"(surviving entries: {lo_hi})")
+    if log is None:
+        log = read_log(path)
     snap = snapshot(path, log)
+    recorded = meta.get("schemas", {})
+    schemas = {**recorded, **_live_schemas(recorded, log, snap)}
+
+    def read(dirs: list, name: str) -> DataFrame:
+        for d in dirs:
+            spark.catalog.refreshByPath(d)
+        reader = spark.read
+        if schemas.get(name) is not None:
+            reader = reader.schema(StructType.fromJson(schemas[name]))
+        return reader.parquet(*dirs)
 
     def table(name: str) -> DataFrame:
         dirs = [os.path.join(path, d) for d in snap[name]]
@@ -488,21 +502,19 @@ def load_index_txn(spark: SparkSession, path: str,
                 raise ValueError(
                     f"snapshot seq {at_seq} at {path} has expired: "
                     f"vacuum_txn deleted its data dirs {gone}")
-        for d in dirs:
-            spark.catalog.refreshByPath(d)
-        return spark.read.parquet(*dirs)
+        return read(dirs, name)
 
     blocks = table("blocks")
     from ..operators.postings import validate_blocks_schema
 
     validate_blocks_schema(blocks, where=f"txnlog blocks at {path}")
     qgrams_p = os.path.join(path, "qgrams")
-    qgrams = spark.read.parquet(qgrams_p) if os.path.isdir(qgrams_p) else None
+    qgrams = read([qgrams_p], "qgrams") if os.path.isdir(qgrams_p) else None
     return BM25Index(
         cfg=TextConfig.from_json(json.dumps(meta["textconfig"])),
         params=BM25Params(**meta["params"]),
         bm25=FoldedBM25.from_json(json.dumps(meta["bm25"])),
-        vocab=spark.read.parquet(os.path.join(path, "vocab")),
+        vocab=read([os.path.join(path, "vocab")], "vocab"),
         postings=table("postings"),
         doclens=table("doclens"),
         n_docs=meta["n_docs"],
@@ -512,6 +524,47 @@ def load_index_txn(spark: SparkSession, path: str,
         qgrams=qgrams,
         last_doc=high_water_mark_txn(path, log),
     )
+
+
+def _read_schema(df: DataFrame) -> dict:
+    """``df``'s schema as a parquet read of its written files reports it
+    (file sources read every field as nullable), in JSON form — what
+    meta.json and the log entries record per table."""
+    def relax(t):
+        if isinstance(t, dict):
+            t = {k: relax(v) for k, v in t.items()}
+            for flag in ("nullable", "containsNull", "valueContainsNull"):
+                if flag in t:
+                    t[flag] = True
+        elif isinstance(t, list):
+            t = [relax(v) for v in t]
+        return t
+
+    return relax(json.loads(df.schema.json()))
+
+
+def _live_schemas(recorded: dict, log: list, snap: dict) -> dict:
+    """Per lifecycle table: the schema every live dir of ``snap`` was
+    written with, or None (read by inference) when a live dir has none
+    recorded or two differ. ``recorded`` is meta.json's, which the init
+    entry's dirs were written with; append and compact entries carry
+    their own, and a checkpoint carries the fold's result."""
+    of_dir: dict = {}
+    for e in log:
+        if e.get("op") == "checkpoint":
+            cp = e.get("schemas", {})
+            of_dir = {d: cp.get(t) for t, dirs in e["snapshot"].items() for d in dirs}
+            continue
+        sch = recorded if e.get("op") == "init" else e.get("schemas", {})
+        for t, dirs in e.get("add", {}).items():
+            for d in dirs:
+                of_dir[d] = sch.get(t)
+    out = {}
+    for t in _TABLES:
+        got = [of_dir.get(d) for d in snap[t]]
+        same = bool(got) and got[0] is not None and all(g == got[0] for g in got)
+        out[t] = got[0] if same else None
+    return out
 
 
 # ----------------------------------------------------- metadata folds
@@ -584,13 +637,23 @@ def append_batch_txn(
 ) -> dict:
     """One append batch as a log transaction: write fresh data dirs,
     publish ONE entry adding them. Identical frozen-vocab semantics to
-    streaming/append.py (shared compute_batch_postings kernel). A
+    streaming/append.py (the shared streaming.stage.stage_batch). A
     replayed ``batch_id`` whose entry is already in the log returns its
     recorded metrics without re-appending (exactly-once for streaming
     retries); a crash before the commit leaves only unreachable data
-    dirs for vacuum."""
-    from ..operators.postings import build_posting_blocks
-    from ..streaming.append import compute_batch_postings
+    dirs for vacuum.
+
+    Staging plan: a batch whose Catalyst size estimate (text and id
+    columns) is at most ``spark.sql.autoBroadcastJoinThreshold`` is
+    staged on the driver — one Arrow collect, tokenize and block encode
+    in numpy, Arrow-built relations written: 6 Spark jobs and no
+    Python-worker stage (the load before it starts none on an index
+    whose schemas are recorded). The driver then holds at most the threshold's bytes of input text plus the
+    batch's postings. Larger batches, or every batch with the threshold
+    at ``-1``, are staged by distributed Spark jobs. Both plans write
+    identical tables. The entry records the three tables' schemas, so
+    loads read them without inference."""
+    from ..streaming.stage import stage_batch
 
     if batch_id is None:
         batch_id = f"adhoc-{uuid.uuid4().hex[:12]}"
@@ -604,29 +667,19 @@ def append_batch_txn(
     idx = load_index_txn(spark, index_dir, log0)
     span = block_span(idx)
     hwm = high_water_mark_txn(index_dir, log0)
-    postings, n_new, first_doc, last_doc, docs = compute_batch_postings(
-        spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)
-
-    postings = postings.cache()
+    batch = stage_batch(spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)
+    frames = {"blocks": batch.blocks, "postings": batch.postings, "doclens": batch.doclens}
     add = {}
-    rel_b, abs_b = _new_data_dir(index_dir, "blocks", f"append-{batch_id}")
-    build_posting_blocks(postings, span=span).write.parquet(abs_b)
-    add["blocks"] = [rel_b]
-    rel_p, abs_p = _new_data_dir(index_dir, "postings", f"append-{batch_id}")
-    postings.write.parquet(abs_p)
-    add["postings"] = [rel_p]
-    rel_d, abs_d = _new_data_dir(index_dir, "doclens", f"append-{batch_id}")
-    postings.groupBy("doc_id").agg(F.first("doclen").alias("doclen")).write.parquet(abs_d)
-    add["doclens"] = [rel_d]
-    postings.unpersist()
-    docs.unpersist()  # auto-id path caches the assigned batch
-
-    n_block_rows = spark.read.parquet(abs_b).count()
+    for t, df in frames.items():
+        rel, absd = _new_data_dir(index_dir, t, f"append-{batch_id}")
+        df.write.parquet(absd)
+        add[t] = [rel]
+    batch.release()
     metrics = {
-        "n_docs_appended": n_new,
-        "first_doc": first_doc,
-        "last_doc": last_doc,
-        "n_block_rows": int(n_block_rows),
+        "n_docs_appended": batch.n_new,
+        "first_doc": batch.first_doc,
+        "last_doc": batch.last_doc,
+        "n_block_rows": batch.count_blocks(os.path.join(index_dir, add["blocks"][0])),
         "append_sec": round(time.time() - t0, 3),
         "span": span,
         "batch_id": batch_id,
@@ -646,7 +699,8 @@ def append_batch_txn(
         return None  # only compactions interleaved: commute with appends
 
     entry = _commit(index_dir, {"op": "append", "batch_id": batch_id,
-                                "add": add, "metrics": metrics},
+                                "add": add, "metrics": metrics,
+                                "schemas": {t: _read_schema(df) for t, df in frames.items()}},
                     validate=_dedupe_or_conflict)
     metrics = entry["metrics"]
 
@@ -677,7 +731,7 @@ def compact_index_txn(spark: SparkSession, index_dir: str) -> dict:
     rel, absd = _new_data_dir(index_dir, "blocks", "compact")
     (merged.repartition("token").sortWithinPartitions("token", "block_id")
      .write.parquet(absd))
-    n_rows = spark.read.parquet(absd).count()
+    n_rows = parquet_rows(absd)
     metrics = {
         "last_doc": high_water_mark_txn(index_dir),
         "n_block_rows": int(n_rows),
@@ -704,7 +758,8 @@ def compact_index_txn(spark: SparkSession, index_dir: str) -> dict:
 
     _commit(index_dir, {"op": "compact", "add": {"blocks": [rel]},
                         "remove": {"blocks": snap["blocks"]},
-                        "metrics": metrics},
+                        "metrics": metrics,
+                        "schemas": {"blocks": _read_schema(merged)}},
             validate=_removed_still_live)
     return metrics
 
@@ -734,6 +789,11 @@ def checkpoint_txn(index_dir: str) -> dict:
     batches would age them out past the stream's replay horizon (the
     Delta ``setTransaction`` retention knob) — not needed at the scales
     demonstrated here."""
+    try:
+        with open(os.path.join(index_dir, META)) as f:
+            recorded = json.load(f).get("schemas", {})
+    except FileNotFoundError:
+        recorded = {}  # a bare log: its dirs' schemas are unknown
     for _ in range(64):
         log = read_log(index_dir)
         if not log:
@@ -751,9 +811,12 @@ def checkpoint_txn(index_dir: str) -> dict:
                 am[e["batch_id"]] = e["metrics"]
             elif e["op"] == "checkpoint":
                 am.update(e.get("append_metrics", {}))
+        snap = snapshot(index_dir, log)
         doc = {
             "op": "checkpoint",
-            "snapshot": snapshot(index_dir, log),
+            "snapshot": snap,
+            "schemas": {t: sch for t, sch in
+                        _live_schemas(recorded, log, snap).items() if sch is not None},
             "append_metrics": am,
             "metrics": {
                 "last_doc": high_water_mark_txn(index_dir, log),

@@ -31,6 +31,14 @@ committed appends. Appends are single-writer: two concurrent appends
 could both pass the high-water-mark check and claim overlapping ids —
 serialize them through one streaming query / one maintenance job.
 
+Staging: :func:`streaming.stage.stage_batch` builds the batch's three
+tables, on the driver when the batch is small (Catalyst's estimate of
+its text and id columns at most ``spark.sql.autoBroadcastJoinThreshold``;
+the driver then holds at most that many bytes of input text plus the
+batch's postings), otherwise by distributed Spark jobs. Setting the
+threshold to ``-1`` forces the distributed plan. Both plans write
+identical tables.
+
 Accumulated appends are folded back into the base tables by
 ``plans.maintenance.compact_index``, triggered automatically after
 ``auto_compact_after`` committed batches.
@@ -49,12 +57,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.bm25 import tokenscore_expr
-from ..functions.udfs import bow_long
-from ..operators.postings import build_posting_blocks
-from ..plans.build import POSTING_COLS, block_span
+from ..plans.build import block_span
 from ..sources.io import (
     META,
     append_batch_dir,
@@ -65,6 +69,7 @@ from ..sources.io import (
     maintenance_lock,
     read_table,
 )
+from .stage import stage_batch
 
 
 def high_water_mark(spark: SparkSession, index_dir: str) -> int:
@@ -92,82 +97,6 @@ def high_water_mark(spark: SparkSession, index_dir: str) -> int:
     # last_doc over the FULL corpus precisely to close that hole.
     row = read_table(spark, index_dir, "doclens").agg(F.max("doc_id")).collect()[0]
     return int(row[0] or 0)
-
-
-def compute_batch_postings(
-    spark: SparkSession,
-    idx,
-    new_docs: DataFrame,
-    *,
-    doc_col: Optional[str],
-    text_col: str,
-    hwm: int,
-):
-    """Backend-agnostic core of one append batch: assign doc ids above
-    the high-water mark and score the batch against the FROZEN
-    vocabulary/constants (reference append_items! semantics, module
-    docstring). Returns ``(postings, n_new, first_doc, last_doc, docs)``
-    — postings in POSTING_COLS long form; ``docs`` is the id-assigned
-    batch (CACHED on the auto-id path — the caller must ``unpersist()``
-    it after materializing postings). The caller derives blocks and
-    doclens and owns staging/commit (rename protocol here, transaction
-    log in sources/txnlog.py)."""
-    if doc_col is None:
-        # scale-safe auto-id: sources.corpus.with_doc_ids (range-
-        # partition + local sort by the text, then zipWithIndex) offset
-        # by the high-water mark — contiguous cross-partition ids in
-        # one consistent computation, never a single-task global sort.
-        # n_new comes from a count over the RAW batch (row count is
-        # id-assignment-invariant), so the shuffle+sort+zipWithIndex
-        # lineage never re-runs for the count; caching ``docs`` keeps
-        # the downstream BOW from re-running it either.
-        from ..sources.corpus import with_doc_ids
-
-        if "doc_id" in new_docs.columns:
-            raise ValueError(
-                "appended batch already has a doc_id column — pass "
-                "doc_col='doc_id' to append under the existing ids "
-                "(auto-id would create a duplicate field)")
-        n_new = new_docs.count()
-        docs = with_doc_ids(new_docs, order_cols=(text_col,), start=hwm).cache()
-        first_doc, last_doc = hwm + 1, hwm + n_new
-    else:
-        docs = new_docs.withColumnRenamed(doc_col, "doc_id") if doc_col != "doc_id" else new_docs
-        agg = docs.agg(
-            F.min("doc_id").alias("low"),
-            F.max("doc_id").alias("high"),
-            F.count("*").alias("n"),
-            F.countDistinct("doc_id").alias("nd"),
-        ).collect()[0]
-        if agg.low is not None and agg.low <= hwm:
-            raise ValueError(f"appended doc_id {agg.low} <= high-water mark {hwm}")
-        if agg.n != agg.nd:
-            # duplicate ids within a batch would double-count in both
-            # scorers; concurrent appends are unsupported (single writer)
-            raise ValueError(
-                f"appended batch has duplicate doc_ids ({agg.n} rows, "
-                f"{agg.nd} distinct)"
-            )
-        n_new = int(agg.n)
-        first_doc = int(agg.low) if agg.low is not None else hwm
-        last_doc = int(agg.high) if agg.high is not None else hwm
-
-    bow = bow_long(docs, idx.cfg, text_col=text_col)
-    # frozen-vocab join: OOV drops; ndocs = fit-time values
-    bow_f = bow.join(idx.vocab.select("token", "ndocs"), "token")
-    # appended doclen counts in-vocabulary tokens (src/bm25invfile.jl:143-152)
-    wdoc = Window.partitionBy("doc_id")
-    bow_f = bow_f.withColumn("doclen", F.sum("tf").over(wdoc))
-    postings = bow_f.withColumn(
-        "impact",
-        tokenscore_expr(
-            idx.bm25,
-            F.col("ndocs").cast("double"),
-            F.col("doclen").cast("double"),
-            F.col("tf").cast("double"),
-        ),
-    ).select(*POSTING_COLS)
-    return postings, n_new, first_doc, last_doc, docs
 
 
 def _int_batch(batch_id) -> Optional[int]:
@@ -367,32 +296,24 @@ def _append_locked(
     idx = load_index(spark, index_dir)
     assert idx.blocks is not None, "append requires a block index (save with blocks)"
     span = block_span(idx)
-    hwm = high_water_mark(spark, index_dir)
-    postings, n_new, first_doc, last_doc, docs = compute_batch_postings(
-        spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)
-
-    postings = postings.cache()
-    new_blocks = build_posting_blocks(postings, span=span)
+    batch = stage_batch(spark, idx, new_docs, doc_col=doc_col, text_col=text_col,
+                        hwm=high_water_mark(spark, index_dir))
     # STAGE all three tables under the batch dir (invisible to readers
     # until the manifest commits)
-    new_blocks.write.parquet(os.path.join(batch_dir, "blocks"))
+    batch.blocks.write.parquet(os.path.join(batch_dir, "blocks"))
     # keep the long-form postings (naive scorer) and doclens in step
-    postings.write.parquet(os.path.join(batch_dir, "postings"))
-    doclens = postings.groupBy("doc_id").agg(F.first("doclen").alias("doclen"))
-    doclens.write.parquet(os.path.join(batch_dir, "doclens"))
-    postings.unpersist()
-    docs.unpersist()  # auto-id path caches the assigned batch
+    batch.postings.write.parquet(os.path.join(batch_dir, "postings"))
+    batch.doclens.write.parquet(os.path.join(batch_dir, "doclens"))
+    batch.release()
 
     # manifest-carried metadata (r03 verdict item 5): last_doc feeds
     # high_water_mark's manifest fold; n_block_rows feeds the
-    # fragmentation estimate. The blocks count reads only the staged
-    # parquet footers (row-count metadata), no data decode.
-    n_block_rows = spark.read.parquet(os.path.join(batch_dir, "blocks")).count()
+    # fragmentation estimate (no job on either staging plan)
     metrics = {
-        "n_docs_appended": n_new,
-        "first_doc": first_doc,
-        "last_doc": last_doc,
-        "n_block_rows": int(n_block_rows),
+        "n_docs_appended": batch.n_new,
+        "first_doc": batch.first_doc,
+        "last_doc": batch.last_doc,
+        "n_block_rows": batch.count_blocks(os.path.join(batch_dir, "blocks")),
         "append_sec": round(time.time() - t0, 3),
         "span": span,
         "batch_id": str(batch_id),

@@ -86,7 +86,7 @@ def main():
 
     t0 = time.time()
     idx = build_bm25_index(base, TextConfig(nlist=[1]), text_col="content")
-    idx.blocks = build_posting_blocks(idx.postings, span=4096)
+    idx.blocks = build_posting_blocks(idx.postings, idx.bm25, span=4096)
     tx.save_index_txn(idx, INDEX_DIR, postings_partitions=64)
     build_sec = round(time.time() - t0, 1)
 
