@@ -41,7 +41,7 @@ def distributed_plan(spark):
 class _PlanRecords(logging.Handler):
     """Collects the arguments of each plan debug record: (plan,
     estimate bytes, threshold, candidate rows) per WAND call, (plan,
-    estimate bytes, threshold) per staged append batch."""
+    estimate bytes, threshold, Arrow bytes) per staged append batch."""
 
     def __init__(self):
         super().__init__(logging.DEBUG)

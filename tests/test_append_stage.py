@@ -3,7 +3,7 @@ the driver, a large one (or any batch with the broadcast threshold at
 -1) by distributed Spark jobs. Both plans must write identical tables
 and raise identical errors; the driver plan must stay inside its job
 budget with no Python-worker stage. Also: transaction-log loads read
-tables with the schemas recorded at commit, so they start no job."""
+tables with the schemas meta.json records, so they start no job."""
 
 import json
 import os
@@ -11,7 +11,7 @@ import shutil
 
 import pytest
 
-from .conftest import STAGE_PLANS, local_df, stage_plan
+from .conftest import STAGE_LOGGER, STAGE_PLANS, local_df, recorded_wand_plans, stage_plan
 from textsearch_spark.config import TextConfig
 from textsearch_spark.operators.postings import build_posting_blocks
 from textsearch_spark.operators.search import search_bm25
@@ -109,6 +109,30 @@ def test_stage_plans_raise_identical_errors(spark, base_dir, tmp_path):
     assert tx.high_water_mark_txn(path) == 7
 
 
+def test_batch_decoding_above_the_bound_takes_spark_plan(spark, base_dir, tmp_path,
+                                                         monkeypatch):
+    """Catalyst estimates a parquet batch by its compressed size, far
+    below the decoded text of a repetitive one: the driver plan
+    collects it, finds its Arrow size above the bound and leaves it to
+    the Spark plan."""
+    from textsearch_spark.plans.sizing import size_estimate
+    from textsearch_spark.streaming import stage
+
+    bound = 16 << 10
+    monkeypatch.setattr(stage, "DRIVER_BATCH_BYTES", bound)
+    src = str(tmp_path / "batch")
+    local_df(spark, [("la casa roja verde " * 20,)] * 200, "text string") \
+        .coalesce(1).write.parquet(src)
+    batch = spark.read.parquet(src)
+    assert size_estimate(batch) <= bound
+    path = _copy(base_dir, tmp_path, "idx")
+    with recorded_wand_plans(STAGE_LOGGER) as records:
+        tx.append_batch_txn(spark, path, batch, auto_compact_after=None)
+    assert [r[0] for r in records] == ["spark"], records
+    assert records[0][3] > 4 * bound  # collected, then decoded above the bound
+    assert tx.high_water_mark_txn(path) == 7 + 200
+
+
 def _jobs_run_by(spark, fn):
     """(job count, the jobs' RDD operation graphs as DOT text) of ``fn()``."""
     import uuid
@@ -167,6 +191,28 @@ def test_load_with_recorded_schemas_starts_no_job(spark, base_dir, tmp_path):
     assert n == 0, n
 
 
+def test_appends_write_the_recorded_schemas(spark, base_dir, tmp_path):
+    """A batch whose ids are 32-bit is written with the table schemas
+    meta.json records, on both plans, so loads can keep reading every
+    dir with them."""
+    from pyspark.sql.types import StructType
+
+    for plan in STAGE_PLANS:
+        path = _copy(base_dir, tmp_path, plan)
+        with open(os.path.join(path, tx.META)) as f:
+            recorded = json.load(f)["schemas"]
+        batch = local_df(spark, list(zip(IDS, TEXTS)), "doc_id int, text string")
+        with stage_plan(spark, plan):
+            tx.append_batch_txn(spark, path, batch, doc_col="doc_id",
+                                auto_compact_after=None)
+        tables, _ = _appended(spark, path)
+        tx.compact_index_txn(spark, path)
+        merged = tx.read_log(path)[-1]["add"]["blocks"][0]
+        tables["merged blocks"] = spark.read.parquet(os.path.join(path, merged))
+        for t, df in tables.items():
+            assert df.schema == StructType.fromJson(recorded[t.split()[-1]]), (plan, t)
+
+
 def test_load_without_recorded_schemas(spark, base_dir, tmp_path):
     """An index written before schemas were recorded loads by inference
     and ranks exactly as with them."""
@@ -189,13 +235,6 @@ def test_load_without_recorded_schemas(spark, base_dir, tmp_path):
     del meta["schemas"]
     with open(meta_p, "w") as f:
         json.dump(meta, f)
-    for p in sorted(os.listdir(os.path.join(path, tx.LOG_DIR))):
-        full = os.path.join(path, tx.LOG_DIR, p)
-        with open(full) as f:
-            entry = json.load(f)
-        entry.pop("schemas", None)
-        with open(full, "w") as f:
-            json.dump(entry, f)
     legacy = tx.load_index_txn(spark, path)
     assert ranked(legacy) == want
     for t in ("vocab", "postings", "doclens", "blocks"):

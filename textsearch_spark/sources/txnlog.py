@@ -483,8 +483,7 @@ def load_index_txn(spark: SparkSession, path: str,
     if log is None:
         log = read_log(path)
     snap = snapshot(path, log)
-    recorded = meta.get("schemas", {})
-    schemas = {**recorded, **_live_schemas(recorded, log, snap)}
+    schemas = meta.get("schemas", {})
 
     def read(dirs: list, name: str) -> DataFrame:
         for d in dirs:
@@ -529,7 +528,7 @@ def load_index_txn(spark: SparkSession, path: str,
 def _read_schema(df: DataFrame) -> dict:
     """``df``'s schema as a parquet read of its written files reports it
     (file sources read every field as nullable), in JSON form — what
-    meta.json and the log entries record per table."""
+    meta.json records per table."""
     def relax(t):
         if isinstance(t, dict):
             t = {k: relax(v) for k, v in t.items()}
@@ -543,28 +542,12 @@ def _read_schema(df: DataFrame) -> dict:
     return relax(json.loads(df.schema.json()))
 
 
-def _live_schemas(recorded: dict, log: list, snap: dict) -> dict:
-    """Per lifecycle table: the schema every live dir of ``snap`` was
-    written with, or None (read by inference) when a live dir has none
-    recorded or two differ. ``recorded`` is meta.json's, which the init
-    entry's dirs were written with; append and compact entries carry
-    their own, and a checkpoint carries the fold's result."""
-    of_dir: dict = {}
-    for e in log:
-        if e.get("op") == "checkpoint":
-            cp = e.get("schemas", {})
-            of_dir = {d: cp.get(t) for t, dirs in e["snapshot"].items() for d in dirs}
-            continue
-        sch = recorded if e.get("op") == "init" else e.get("schemas", {})
-        for t, dirs in e.get("add", {}).items():
-            for d in dirs:
-                of_dir[d] = sch.get(t)
-    out = {}
-    for t in _TABLES:
-        got = [of_dir.get(d) for d in snap[t]]
-        same = bool(got) and got[0] is not None and all(g == got[0] for g in got)
-        out[t] = got[0] if same else None
-    return out
+def _conform(df: DataFrame, like: DataFrame) -> DataFrame:
+    """``df`` cast to the columns and types of the table ``like`` it is
+    added to, so every dir of a table has the schema meta.json records."""
+    if sorted(df.columns) != sorted(like.columns):
+        raise ValueError(f"columns {df.columns} do not match the table's {like.columns}")
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in like.schema.fields])
 
 
 # ----------------------------------------------------- metadata folds
@@ -643,16 +626,18 @@ def append_batch_txn(
     retries); a crash before the commit leaves only unreachable data
     dirs for vacuum.
 
-    Staging plan: a batch whose Catalyst size estimate (text and id
-    columns) is at most ``spark.sql.autoBroadcastJoinThreshold`` is
-    staged on the driver — one Arrow collect, tokenize and block encode
-    in numpy, Arrow-built relations written: 6 Spark jobs and no
-    Python-worker stage (the load before it starts none on an index
-    whose schemas are recorded). The driver then holds at most the threshold's bytes of input text plus the
-    batch's postings. Larger batches, or every batch with the threshold
-    at ``-1``, are staged by distributed Spark jobs. Both plans write
-    identical tables. The entry records the three tables' schemas, so
-    loads read them without inference."""
+    Staging plan: a batch whose text and id columns are at most
+    ``spark.sql.autoBroadcastJoinThreshold`` and at most
+    ``streaming.stage.DRIVER_BATCH_BYTES`` (Catalyst's estimate before
+    the collect, Arrow size after it) is staged on the driver — one
+    Arrow collect, tokenize and block encode in numpy, Arrow-built
+    relations written: 6 Spark jobs and no Python-worker stage (the
+    load before it starts none on an index whose schemas are recorded).
+    Larger batches, or every batch with the threshold at ``-1``, are
+    staged by distributed Spark jobs; the stage module states the
+    driver memory bound. Both plans write identical tables, cast to the
+    schemas the loaded tables have, so loads keep reading every dir
+    with the schemas meta.json records."""
     from ..streaming.stage import stage_batch
 
     if batch_id is None:
@@ -668,7 +653,9 @@ def append_batch_txn(
     span = block_span(idx)
     hwm = high_water_mark_txn(index_dir, log0)
     batch = stage_batch(spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)
-    frames = {"blocks": batch.blocks, "postings": batch.postings, "doclens": batch.doclens}
+    frames = {"blocks": _conform(batch.blocks, idx.blocks),
+              "postings": _conform(batch.postings, idx.postings),
+              "doclens": _conform(batch.doclens, idx.doclens)}
     add = {}
     for t, df in frames.items():
         rel, absd = _new_data_dir(index_dir, t, f"append-{batch_id}")
@@ -699,8 +686,7 @@ def append_batch_txn(
         return None  # only compactions interleaved: commute with appends
 
     entry = _commit(index_dir, {"op": "append", "batch_id": batch_id,
-                                "add": add, "metrics": metrics,
-                                "schemas": {t: _read_schema(df) for t, df in frames.items()}},
+                                "add": add, "metrics": metrics},
                     validate=_dedupe_or_conflict)
     metrics = entry["metrics"]
 
@@ -727,7 +713,7 @@ def compact_index_txn(spark: SparkSession, index_dir: str) -> dict:
     log = read_log(index_dir)
     snap = snapshot(index_dir, log)
     idx = load_index_txn(spark, index_dir)
-    merged = compact_blocks(idx.blocks, idx.bm25).select(*BLOCKS_COLUMNS)
+    merged = _conform(compact_blocks(idx.blocks, idx.bm25).select(*BLOCKS_COLUMNS), idx.blocks)
     rel, absd = _new_data_dir(index_dir, "blocks", "compact")
     (merged.repartition("token").sortWithinPartitions("token", "block_id")
      .write.parquet(absd))
@@ -758,8 +744,7 @@ def compact_index_txn(spark: SparkSession, index_dir: str) -> dict:
 
     _commit(index_dir, {"op": "compact", "add": {"blocks": [rel]},
                         "remove": {"blocks": snap["blocks"]},
-                        "metrics": metrics,
-                        "schemas": {"blocks": _read_schema(merged)}},
+                        "metrics": metrics},
             validate=_removed_still_live)
     return metrics
 
@@ -789,11 +774,6 @@ def checkpoint_txn(index_dir: str) -> dict:
     batches would age them out past the stream's replay horizon (the
     Delta ``setTransaction`` retention knob) — not needed at the scales
     demonstrated here."""
-    try:
-        with open(os.path.join(index_dir, META)) as f:
-            recorded = json.load(f).get("schemas", {})
-    except FileNotFoundError:
-        recorded = {}  # a bare log: its dirs' schemas are unknown
     for _ in range(64):
         log = read_log(index_dir)
         if not log:
@@ -811,12 +791,9 @@ def checkpoint_txn(index_dir: str) -> dict:
                 am[e["batch_id"]] = e["metrics"]
             elif e["op"] == "checkpoint":
                 am.update(e.get("append_metrics", {}))
-        snap = snapshot(index_dir, log)
         doc = {
             "op": "checkpoint",
-            "snapshot": snap,
-            "schemas": {t: sch for t, sch in
-                        _live_schemas(recorded, log, snap).items() if sch is not None},
+            "snapshot": snapshot(index_dir, log),
             "append_metrics": am,
             "metrics": {
                 "last_doc": high_water_mark_txn(index_dir, log),

@@ -32,12 +32,12 @@ could both pass the high-water-mark check and claim overlapping ids —
 serialize them through one streaming query / one maintenance job.
 
 Staging: :func:`streaming.stage.stage_batch` builds the batch's three
-tables, on the driver when the batch is small (Catalyst's estimate of
-its text and id columns at most ``spark.sql.autoBroadcastJoinThreshold``;
-the driver then holds at most that many bytes of input text plus the
-batch's postings), otherwise by distributed Spark jobs. Setting the
-threshold to ``-1`` forces the distributed plan. Both plans write
-identical tables.
+tables, on the driver when the batch is small (its text and id columns
+at most ``spark.sql.autoBroadcastJoinThreshold`` and at most
+``stage.DRIVER_BATCH_BYTES``, by Catalyst's estimate before the collect
+and by Arrow size after it; the stage module states the driver memory
+bound), otherwise by distributed Spark jobs. Setting the threshold to
+``-1`` forces the distributed plan. Both plans write identical tables.
 
 Accumulated appends are folded back into the base tables by
 ``plans.maintenance.compact_index``, triggered automatically after

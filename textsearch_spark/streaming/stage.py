@@ -9,10 +9,11 @@ frozen at fit time, OOV tokens dropped, and ``doclen`` counting the
 in-vocabulary tokens.
 
 **Plan rule.** The batch, projected to its text (and id) column, is
-*small* when Catalyst's size estimate of it is at most
-``spark.sql.autoBroadcastJoinThreshold`` — the rule the WAND serving
-plan uses (plans/sizing.py). A string text column and an integral id
-column are also required.
+*small* when it is at most ``min(spark.sql.autoBroadcastJoinThreshold,
+DRIVER_BATCH_BYTES)`` twice over: by Catalyst's size estimate before it
+is collected (the plan statistics the WAND serving plan also reads,
+plans/sizing.py), and by its Arrow size after. A string text column and
+an integral id column are also required.
 
 - **Driver plan** (small): one Arrow collect of the batch; ids assigned
   in ``sources.corpus.with_doc_ids`` order (ascending text, nulls
@@ -25,15 +26,29 @@ column are also required.
   ``impact`` is added by ``tokenscore_expr`` inside the postings write,
   as on the Spark plan. Spark jobs: the collect, two for the ``ndocs``
   lookup (the broadcast and its collect) and one per table written.
-- **Spark plan** (above the threshold, or with it at ``-1``):
+- **Spark plan** (otherwise, and always with the threshold at ``-1``):
   :func:`compute_batch_postings` then ``build_posting_blocks`` and the
   doclens ``groupBy``, all distributed.
 
 Both plans produce identical tables (tests/test_append_stage.py).
 
-Driver memory bound: the driver plan holds the batch's input text — at
-most the threshold's bytes by Catalyst's estimate, 10 MB by default —
-plus its postings and block rows.
+``DRIVER_BATCH_BYTES`` sits just below where the driver plan stops
+being faster. The driver plan tokenizes in one Python thread, about
+0.8 s per MB of code text; the Spark plan starts about 2 s slower and
+tokenizes in parallel. Appending generated code batches to a 2k-doc
+index on a 4-CPU host (tools/append_plan_crossover.py, medians of
+three), the driver plan took 2.6 s and the Spark plan 3.1 s at 2.1 MB
+of text, and 3.9 s against 3.2 s at 3.2 MB. More cores cannot pull
+the crossover much lower: the driver plan's 2 s head start lasts for
+2.5 MB of tokenizing.
+
+Driver memory: a batch stays on the driver only when its Arrow size is
+at most ``DRIVER_BATCH_BYTES``; it is then held with its postings and
+block rows. The collect itself is bounded only by the estimate, like
+a broadcast join's: for a file source that is the compressed file size
+scaled to the projected columns, and text decodes to several times it
+(a parquet batch of code text estimated at 72 KB holds 535 KB). A batch
+that decodes above the bound is dropped and staged by the Spark plan.
 """
 
 from __future__ import annotations
@@ -56,12 +71,17 @@ from ..functions.codec import encode_block
 from ..functions.udfs import bow_arrays, bow_long
 from ..operators.postings import BLOCKS_COLUMNS, build_posting_blocks
 from ..plans.build import POSTING_COLS, block_span
-from ..plans.sizing import is_small
+from ..plans.sizing import broadcast_threshold, size_estimate
 from ..sources.io import parquet_rows
 
 _log = logging.getLogger(__name__)
-# one debug record per staged batch: plan, estimate bytes, threshold
-_PLAN_RECORD = "append plan=%s estimate_bytes=%d threshold=%d"
+# one debug record per staged batch: plan, estimate bytes, threshold,
+# Arrow bytes of the collected batch (None when it was not collected)
+_PLAN_RECORD = "append plan=%s estimate_bytes=%d threshold=%d arrow_bytes=%s"
+
+# the largest batch (Arrow bytes of its text and id columns) the driver
+# plan stages; above it the Spark plan is as fast (module docstring)
+DRIVER_BATCH_BYTES = 2 << 20
 
 
 @dataclass
@@ -105,13 +125,19 @@ def stage_batch(spark: SparkSession, idx, new_docs: DataFrame, *,
     cols = [text_col] if doc_col is None else [doc_col, text_col]
     batch = new_docs.select(*cols)
     types = {f.name: f.dataType for f in batch.schema.fields}
-    small, estimate, threshold = is_small(batch)
-    on_driver = (small and isinstance(types[text_col], StringType)
-                 and (doc_col is None or isinstance(types[doc_col], IntegralType)))
-    _log.debug(_PLAN_RECORD, "driver" if on_driver else "spark", estimate, threshold)
+    estimate, threshold = size_estimate(batch), broadcast_threshold(spark)
+    bound = min(threshold, DRIVER_BATCH_BYTES)
+    tbl = None
+    if (0 <= estimate <= bound and isinstance(types[text_col], StringType)
+            and (doc_col is None or isinstance(types[doc_col], IntegralType))):
+        tbl = batch.toArrow()
+    on_driver = tbl is not None and tbl.nbytes <= bound
+    _log.debug(_PLAN_RECORD, "driver" if on_driver else "spark", estimate, threshold,
+               None if tbl is None else tbl.nbytes)
     if on_driver:
-        return _stage_on_driver(spark, idx, batch, doc_col=doc_col,
+        return _stage_on_driver(spark, idx, tbl, doc_col=doc_col,
                                 text_col=text_col, hwm=hwm)
+    del tbl  # decoded above the bound: not kept while the Spark plan runs
     postings, n_new, first_doc, last_doc, docs = compute_batch_postings(
         spark, idx, new_docs, doc_col=doc_col, text_col=text_col, hwm=hwm)
     postings = postings.cache()
@@ -262,9 +288,9 @@ def _longs(*names: str) -> list:
     return [StructField(c, LongType()) for c in names]
 
 
-def _stage_on_driver(spark: SparkSession, idx, batch: DataFrame, *,
+def _stage_on_driver(spark: SparkSession, idx, tbl, *,
                      doc_col: Optional[str], text_col: str, hwm: int) -> StagedBatch:
-    tbl = batch.toArrow()
+    """Stage the collected batch ``tbl`` (a pyarrow Table)."""
     texts = tbl.column(text_col).to_pylist()
     n_new = len(texts)
     if doc_col is None:
